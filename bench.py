@@ -22,6 +22,7 @@ cluster-shaped measurement.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -33,6 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from local_stream_stack_spark.queries import QUERIES  # noqa: E402
 from local_stream_stack_spark.session import get_spark  # noqa: E402
 from local_stream_stack_spark.streaming.metrics import MetricsListener  # noqa: E402
+from local_stream_stack_spark.utils.task_time import group_task_run_s  # noqa: E402
 
 # Entries that execute a live micro-batch pipeline inside the query
 # fn (every registered ``stream_*`` name). Their wall time is dominated
@@ -773,25 +775,13 @@ def _run_bench() -> int:
     # Per-query executor TASK-TIME alongside wall-clock (VERDICT r13
     # #9): at sf0.1 every headline query sits at the per-job
     # scheduling floor, so the 8-vs-32-core wall ratio carries no
-    # parallelism signal — task-time/wall does. Sum of per-executor
-    # totalDuration from the AppStatusStore (listener-bus maintained;
-    # task-end events land before the job returns, so a
-    # delta around the timed window attributes cleanly).
-    _status_store = spark.sparkContext._jsc.sc().statusStore()
-
-    def _task_time_ms() -> int:
-        try:
-            execs = _status_store.executorList(False)
-            return int(
-                sum(
-                    execs.apply(i).totalDuration()
-                    for i in range(execs.size())
-                )
-            )
-        except Exception:
-            return 0
-
+    # parallelism signal — task-time/wall does. Summed stage
+    # executorRunTime of the run's own job group; a query whose
+    # records cannot be read gets no entry. Micro-batch jobs of a
+    # streaming entry run under their stream's own job group and are
+    # not counted.
     task_time: dict[str, float] = {}
+    run_ids = itertools.count()
 
     # per-query progress trace to STDERR (stdout stays exactly one
     # JSON line); off by default so the driver's captured tail never
@@ -811,13 +801,14 @@ def _run_bench() -> int:
             best_batches: list[int] = []
             for _ in range(runs):
                 n_seen = len(listener.snapshot())
-                tt0 = _task_time_ms()
+                group = f"bench-{name}-{next(run_ids)}"
+                spark.sparkContext.setJobGroup(group, name)
                 t0 = time.time()
                 spec.fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 dt = time.time() - t0
-                run_task_ms = _task_time_ms() - tt0
+                run_task_s = group_task_run_s(spark, group)
                 if _is_streaming(name):
                     # progress events are delivered on the listener
                     # bus asynchronously AFTER the query stops — poll
@@ -830,7 +821,10 @@ def _run_bench() -> int:
                         time.sleep(0.05)
                 if best is None or dt < best:
                     best = dt
-                    task_time[name] = round(run_task_ms / 1000.0, 3)
+                    if run_task_s is None:
+                        task_time.pop(name, None)
+                    else:
+                        task_time[name] = round(run_task_s, 3)
                     best_batches = [
                         e["batch_duration_ms"]
                         for e in listener.snapshot()[n_seen:]

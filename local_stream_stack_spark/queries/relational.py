@@ -26,15 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from local_stream_stack_spark.catalog import load_table
+from local_stream_stack_spark.catalog import oracle_table as _t
 from local_stream_stack_spark.queries.registry import query
-from local_stream_stack_spark.session import configure_for_oracle
 from local_stream_stack_spark.utils.ts import epoch_s
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # Exact-decimal money expressions (see module docstring). Spark SQL and

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from local_stream_stack_spark.catalog import load_table
+from local_stream_stack_spark.catalog import oracle_table as _t
 from local_stream_stack_spark.queries.registry import query
 from local_stream_stack_spark.queries.relational import (
     DISC_PRICE,
@@ -32,7 +32,6 @@ from local_stream_stack_spark.queries.relational import (
     QTY_DEC,
     _sum_round,
 )
-from local_stream_stack_spark.session import configure_for_oracle
 from local_stream_stack_spark.utils.ts import epoch_us
 
 
@@ -74,11 +73,6 @@ def _adjacent_slope_ext(days: DataFrame, slope_sql: str) -> DataFrame:
         F.col("__ext.lo").alias("__vgr_lo"),
         F.col("__ext.hi").alias("__vgr_hi"),
     )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @query(

@@ -22,15 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from local_stream_stack_spark.catalog import load_table
+from local_stream_stack_spark.catalog import load_table, oracle_table as _t
 from local_stream_stack_spark.queries.registry import query
 from local_stream_stack_spark.session import configure_for_oracle
 from local_stream_stack_spark.utils.scratch import ephemeral_dir
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_for_oracle(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @query(

@@ -15,6 +15,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from local_stream_stack_spark.catalog import read_parquet
+
 _FORMATS = ("parquet", "json", "csv", "orc")
 
 
@@ -34,6 +36,9 @@ class FileSource:
             raise ValueError("path is required")
 
     def read_batch(self, spark: SparkSession) -> DataFrame:
+        if self.format == "parquet" and self.schema is None and not self.options:
+            # skips the per-read schema-inference job (catalog.read_parquet)
+            return read_parquet(spark, self.path)
         reader = spark.read.format(self.format).options(**self.options)
         if self.schema is not None:
             reader = reader.schema(self.schema)

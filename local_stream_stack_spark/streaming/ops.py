@@ -1248,14 +1248,14 @@ def ingest_neardup_stream_tws(
     the transformWithState realization of the design note on
     ``ingest_neardup_stream_parquet``: instead of scanning the
     admitted-key parquet store every epoch (O(store) per epoch, even
-    with the broadcast-probe flip), each LSH band key is a RocksDB
-    state-store KEY, so the per-epoch lookup cost is O(batch keys)
-    point probes and the admitted-key set never gets rescanned.
+    with the broadcast-probe flip), claimed LSH band keys live in
+    RocksDB state sharded by key hash, so an epoch reads only the
+    shards its keys touch and no parquet store gets rescanned.
 
     Shape: stateless per-row band keys (portable md5 minhash,
-    ``minhash_band_keys_rowwise``) -> groupBy(band, bh) ->
-    transformWithStateInPandas, where per-bucket ValueState records
-    "this bucket was seen in an earlier epoch". The processor emits a
+    ``minhash_band_keys_rowwise``) -> groupBy(hash shard of band, bh)
+    -> transformWithStateInPandas, where each shard's ListState holds
+    the band keys "seen in an earlier epoch". The processor emits a
     (doc, hit) verdict per key: hit when the bucket was claimed by an
     earlier epoch OR a lower-``order_col`` doc shares it in this
     batch. A foreachBatch sink folds verdicts per doc (admitted = no
@@ -1281,6 +1281,19 @@ def ingest_neardup_stream_tws(
     changelog-checkpoints incrementally. Per-epoch cost tracks batch
     size, not corpus size — SCALE.md compares the two store shapes at
     the multi-decade key counts.
+
+    RETENTION IS UNBOUNDED. On the TWS path the claims live in one
+    RocksDB ListState per hash shard of the band key (see
+    ``neardup_claims_stream_tws``), and a claim is never dropped: there
+    is no state TTL and no watermark-driven eviction, so state grows
+    with every distinct band key the stream has ever seen, for the
+    life of the checkpoint. Each micro-batch, ``handleInputRows``
+    reads a touched shard's WHOLE claim list into a Python set, so
+    per-epoch state-read time and worker memory grow as claims / shards
+    too. Callers that need a bound must start a new
+    ``checkpoint_location`` + ``store_path`` (forgetting every earlier
+    claim) or compact the corpus upstream; the fallback path keeps the
+    same unbounded key set as ``store_path/keys`` parquet epochs.
     """
     from local_stream_stack_spark.operators.dedup import (
         minhash_band_keys_rowwise,

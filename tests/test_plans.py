@@ -392,27 +392,27 @@ def _hazards(df) -> list:
     )
 
 
-def _guard_fixture(spark):
+def _guard_fixture(spark, sf_dir):
     # must scan a BASE TABLE: the detector only flags segments that
     # re-execute corpus-scale work (a spark.range leaf is both cheap
     # and already range-partitioned on id, so it would be vacuous)
     from pyspark.sql import functions as F
 
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return d.select(
         "doc_id",
         F.explode(F.split(F.col("text"), " ")).alias("t"),
     ).withColumn("n", F.regexp_count("t", F.lit("[a-z]+")))
 
 
-def test_sort_sampling_guard_flags_unpinned_fixture(spark):
-    flagged = _hazards(_guard_fixture(spark).orderBy("t", "n"))
+def test_sort_sampling_guard_flags_unpinned_fixture(spark, sf_dir):
+    flagged = _hazards(_guard_fixture(spark, sf_dir).orderBy("t", "n"))
     assert flagged, "unpinned scan->Generate+regex under orderBy must flag"
     assert "Generate" in flagged[0]
 
 
-def test_sort_sampling_guard_accepts_pinned_fixture(spark):
-    pinned = _guard_fixture(spark).localCheckpoint(eager=True).orderBy(
+def test_sort_sampling_guard_accepts_pinned_fixture(spark, sf_dir):
+    pinned = _guard_fixture(spark, sf_dir).localCheckpoint(eager=True).orderBy(
         "t", "n"
     )
     assert _hazards(pinned) == []
