@@ -411,28 +411,3 @@ def assign_grouped_literal(
         "g", "id", "x", best["c"].alias("c"), best["d"].alias("d")
     )
     return out if keep_dist else out.drop("d")
-
-
-def assign_grouped(
-    vectors: DataFrame, cent: DataFrame, keep_dist: bool = False
-) -> DataFrame:
-    """Nearest-centroid assignment per group on (g, id, x) against a
-    (g, c, m) centroid DATAFRAME: broadcast join on g, argmin via
-    struct-min (one partial-aggregated shuffle on (g, id)). Kept for
-    codebooks that already live in a DataFrame; prefer
-    ``assign_grouped_literal`` when the codebook is driver-side."""
-    scored = vectors.join(F.broadcast(cent), "g").select(
-        "g",
-        "id",
-        "x",
-        "c",
-        _sqdist(F.col("x"), F.col("m")).alias("d"),
-    )
-    best = scored.groupBy("g", "id").agg(
-        F.min(F.struct("d", "c")).alias("best"),
-        F.first("x").alias("x"),
-    )
-    out = best.select(
-        "g", "id", "x", F.col("best.c").alias("c"), F.col("best.d").alias("d")
-    )
-    return out if keep_dist else out.drop("d")

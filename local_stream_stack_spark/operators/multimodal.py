@@ -114,6 +114,23 @@ def decode_stub(payload: bytes, modality: str) -> dict:
     return {"width": 0, "height": 0, "duration_ms": 100 + (head + n) % 10_000}
 
 
+def sum_image_stats(*images: dict) -> dict:
+    """One row of pixel stats over several decoded images of a doc:
+    pixel counts and channel sums add up, ``r_min``/``r_max`` take the
+    extremes. Each image is a codec decoder's stats dict (bmp, tga,
+    pcx, pnm). Pure Python, so executor-side decode loops can call
+    it."""
+    return {
+        "n_images": len(images),
+        "n_px": sum(im["n_px"] for im in images),
+        "r_sum": sum(im["r_sum"] for im in images),
+        "g_sum": sum(im["g_sum"] for im in images),
+        "b_sum": sum(im["b_sum"] for im in images),
+        "r_min": min(im["r_min"] for im in images),
+        "r_max": max(im["r_max"] for im in images),
+    }
+
+
 def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over (id, payload, meta) frames.
 

@@ -344,33 +344,6 @@ def _hyperplanes(n_tables: int, n_planes: int, dim: int, seed: int = 42):
     ]
 
 
-def lsh_bucket_ids(
-    vec: Column, planes: list[list[float]]
-) -> Column:
-    """Bucket id for one LSH table: sign-bit integer over the planes.
-
-    Pure-expression form (no Python) — fine for a handful of planes;
-    ``_lsh_buckets_udf`` is the vectorized all-tables-at-once path
-    used by ``lsh_bucket_topk``.
-    """
-    bucket = F.lit(0).cast("bigint")
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(p) for p in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(proj >= 0, F.lit(1).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
-
-
 def _lsh_buckets_udf(planes: list[list[list[float]]]):
     """Arrow-batched bucket assignment for ALL tables in one matmul.
 
@@ -378,8 +351,8 @@ def _lsh_buckets_udf(planes: list[list[list[float]]]):
     plane) — builds an O(tables x planes x dim) codegen tree that
     dominates runtime; a single (batch x dim) @ (dim x tables*planes)
     numpy matmul per Arrow batch is the 100 TB shape. Planes are
-    captured in the closure, so buckets are bit-identical to the
-    expression form.
+    captured in the closure as fixed float64 literals, so every batch,
+    task and re-execution assigns the same buckets.
     """
     from pyspark.sql.functions import pandas_udf
 

@@ -38,6 +38,9 @@ if that ever changes.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+from types import ModuleType
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -54,6 +57,7 @@ from local_stream_stack_spark.operators.dedup import (
 from local_stream_stack_spark.operators.multimodal import (
     attach_binary_payload,
     extract_features,
+    sum_image_stats,
 )
 from local_stream_stack_spark.operators.similarity import (
     cosine,
@@ -1009,6 +1013,77 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_features(mm).localCheckpoint(eager=True).orderBy("id")
 
 
+def decoded_stats_query(
+    spark: SparkSession,
+    sf_dir: str,
+    codec: str,
+    schema: str,
+    per_doc: Callable[[ModuleType, int], Iterator[dict]],
+    *,
+    fan_out: bool,
+    order: tuple[str, ...] = ("doc_id",),
+) -> DataFrame:
+    """The shared skeleton of the real-codec ``multimodal_*`` queries:
+    one Arrow-batched mapInPandas pass over ``documents.doc_id`` that
+    calls ``per_doc(module, doc_id)`` in the Python worker and emits
+    one output row per dict it yields (one per doc, or one per frame
+    for multimodal_video_frames), then pins the rows and sorts them by
+    ``order``. ``module`` is ``operators.<codec>``, imported once per
+    partition.
+
+    ``schema`` is the DDL output schema as plain ``name type`` pairs.
+    Its first column is ``doc_id``, filled in here; every other column
+    is read from the yielded dict by name, so a decoder that stops
+    returning a field fails the task instead of emitting a null.
+
+    ``fan_out`` repartitions the ids to the session parallelism before
+    the decode. The testdata ``documents`` table is ONE small parquet
+    file (one input split), so without it the whole codec runs on a
+    single core (see multimodal_jpeg_decode). The png, wav and
+    video_frames queries keep the single-split scan; whether they
+    should fan out too is a question for its own A/B.
+
+    The pin sits before the global sort: the decode is above the last
+    exchange, so the range partitioner's bound-sampling job would
+    re-run the whole decode a second time just to pick sort bounds
+    (guide §5)."""
+    d = _t(spark, sf_dir, "documents").select("doc_id")
+    if fan_out:
+        d = d.repartition(spark.sparkContext.defaultParallelism)
+    cols = [field.split()[0] for field in schema.split(",")]
+    assert cols[0] == "doc_id", schema
+
+    def run(batches):
+        import importlib
+
+        import pandas as pd
+
+        mod = importlib.import_module(
+            f"local_stream_stack_spark.operators.{codec}"
+        )
+        for pdf in batches:
+            rows = [
+                [did, *(feats[c] for c in cols[1:])]
+                for did in map(int, pdf["doc_id"])
+                for feats in per_doc(mod, did)
+            ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return (
+        d.mapInPandas(run, schema=schema)
+        .localCheckpoint(eager=True)
+        .orderBy(*order)
+    )
+
+
+# the 16-colour palette of the GIF and RLE8-BMP fixtures
+_PALETTE16 = bytes(
+    v
+    for i in range(16)
+    for v in ((i * 13) % 256, (i * 29) % 256, (i * 7 + 3) % 256)
+)
+
+
 @query(
     "multimodal_png_decode",
     oracle="""
@@ -1045,55 +1120,25 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is the standard media scan: executor-side decode, no
     shuffle until the aggregate; real corpora swap the fixture
     generator for ``read_binary_dir`` payloads unchanged."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.png import (
-            decode_image,
-            encode_png,
+    def per_doc(png, did):
+        w, h = 16 + did % 9, 12 + did % 7
+        px = bytes(
+            (did * 31 + x * 7 + y * 13) % 251
+            for y in range(h)
+            for x in range(w)
         )
+        feats = png.decode_image(png.encode_png(w, h, px, channels=1))
+        assert feats["channels"] == 1
+        yield feats
 
-        cols = ["doc_id", "width", "height", "px_sum", "px_min", "px_max"]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 9, 12 + did % 7
-                px = bytes(
-                    (did * 31 + x * 7 + y * 13) % 251
-                    for y in range(h)
-                    for x in range(w)
-                )
-                feats = decode_image(encode_png(w, h, px, channels=1))
-                assert feats["channels"] == 1
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": feats["width"],
-                        "height": feats["height"],
-                        "px_sum": feats["px_sum"],
-                        "px_min": feats["px_min"],
-                        "px_max": feats["px_max"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return (
-        d.mapInPandas(
-            run,
-            schema=(
-                "doc_id bigint, width int, height int, px_sum bigint,"
-                " px_min int, px_max int"
-            ),
-        )
-        # pin before the global sort: the subtree below is narrow
-        # (scan -> decode, no exchange), so the range partitioner's
-        # bound-sampling job would re-run the WHOLE PNG decode a
-        # second time just to pick sort bounds (guide §5)
-        .localCheckpoint(eager=True)
-        .orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "png",
+        "doc_id bigint, width int, height int, px_sum bigint,"
+        " px_min int, px_max int",
+        per_doc,
+        fan_out=False,
     )
 
 
@@ -1177,71 +1222,38 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 8; VERDICT r8 nit #1).  The shuffled payload is 5000 bigint
     ids — negligible.  On a real binary corpus the scan already
     arrives in many splits and this repartition is a no-op to remove."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.jpeg import (
-            decode_image_jpeg,
-            encode_jpeg,
+    def per_doc(jpeg, did):
+        w = 16 * (1 + did % 3)
+        h = 16 * (1 + did % 2)
+        yp = bytes(
+            (did * 31 + (x // 8) * 7 + (y // 8) * 13) % 251
+            for y in range(h)
+            for x in range(w)
+        )
+        cb = bytes(
+            (did * 17 + (x // 16) * 5 + (y // 16) * 3) % 230 + 10
+            for y in range(h)
+            for x in range(w)
+        )
+        cr = bytes(
+            (did * 23 + (x // 16) * 11 + (y // 16) * 19) % 240
+            for y in range(h)
+            for x in range(w)
+        )
+        yield jpeg.decode_image_jpeg(
+            jpeg.encode_jpeg(w, h, [yp, cb, cr], subsampling="420")
         )
 
-        cols = [
-            "doc_id", "width", "height", "channels",
-            "y_sum", "y_min", "y_max", "cb_sum", "cr_sum",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 16 * (1 + did % 3)
-                h = 16 * (1 + did % 2)
-                yp = bytes(
-                    (did * 31 + (x // 8) * 7 + (y // 8) * 13) % 251
-                    for y in range(h)
-                    for x in range(w)
-                )
-                cb = bytes(
-                    (did * 17 + (x // 16) * 5 + (y // 16) * 3) % 230 + 10
-                    for y in range(h)
-                    for x in range(w)
-                )
-                cr = bytes(
-                    (did * 23 + (x // 16) * 11 + (y // 16) * 19) % 240
-                    for y in range(h)
-                    for x in range(w)
-                )
-                feats = decode_image_jpeg(
-                    encode_jpeg(w, h, [yp, cb, cr], subsampling="420")
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "width": feats["width"],
-                        "height": feats["height"],
-                        "channels": feats["channels"],
-                        "y_sum": feats["y_sum"],
-                        "y_min": feats["y_min"],
-                        "y_max": feats["y_max"],
-                        "cb_sum": feats["cb_sum"],
-                        "cr_sum": feats["cr_sum"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, width int, height int, channels int,"
-            " y_sum bigint, y_min int, y_max int, cb_sum bigint,"
-            " cr_sum bigint"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "jpeg",
+        "doc_id bigint, width int, height int, channels int,"
+        " y_sum bigint, y_min int, y_max int, cb_sum bigint,"
+        " cr_sum bigint",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -1300,73 +1312,36 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     GIF. Same fan-out note as JPEG: the id column is repartitioned
     because the testdata table is one small file; a real binary corpus
     already scans in many splits."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.gif import (
-            decode_image_gif,
-            encode_gif,
+    def per_doc(gif, did):
+        w1, h1 = 8 + did % 5, 6 + did % 3
+        w2, h2 = 4 + did % 3, 4 + did % 2
+        f1 = bytes(
+            (did * 11 + x * 3 + y * 5) % 16
+            for y in range(h1)
+            for x in range(w1)
+        )
+        f2 = bytes(
+            (did * 7 + x + 2 * y) % 16
+            for y in range(h2)
+            for x in range(w2)
+        )
+        yield gif.decode_image_gif(
+            gif.encode_gif(
+                64, 48,
+                [(0, 0, w1, h1, f1), (2, 1, w2, h2, f2)],
+                _PALETTE16,
+            )
         )
 
-        pal = bytes(
-            v
-            for i in range(16)
-            for v in ((i * 13) % 256, (i * 29) % 256, (i * 7 + 3) % 256)
-        )
-        cols = [
-            "doc_id", "n_frames", "n_px",
-            "r_sum", "g_sum", "b_sum", "r_min", "r_max",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w1, h1 = 8 + did % 5, 6 + did % 3
-                w2, h2 = 4 + did % 3, 4 + did % 2
-                f1 = bytes(
-                    (did * 11 + x * 3 + y * 5) % 16
-                    for y in range(h1)
-                    for x in range(w1)
-                )
-                f2 = bytes(
-                    (did * 7 + x + 2 * y) % 16
-                    for y in range(h2)
-                    for x in range(w2)
-                )
-                feats = decode_image_gif(
-                    encode_gif(
-                        64, 48,
-                        [(0, 0, w1, h1, f1), (2, 1, w2, h2, f2)],
-                        pal,
-                    )
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": feats["n_frames"],
-                        "n_px": feats["n_px"],
-                        "r_sum": feats["r_sum"],
-                        "g_sum": feats["g_sum"],
-                        "b_sum": feats["b_sum"],
-                        "r_min": feats["r_min"],
-                        "r_max": feats["r_max"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_frames int, n_px bigint, r_sum bigint,"
-            " g_sum bigint, b_sum bigint, r_min int, r_max int"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "gif",
+        "doc_id bigint, n_frames int, n_px bigint, r_sum bigint,"
+        " g_sum bigint, b_sum bigint, r_min int, r_max int",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -1423,63 +1398,33 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard media scan: executor-side decode, no shuffle until
     the aggregate; real corpora swap the fixture generator for
     ``read_binary_dir`` payloads unchanged."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.wav import (
-            decode_audio,
-            encode_wav,
-        )
-
-        cols = [
-            "doc_id", "sample_rate", "channels", "n_frames",
-            "duration_ms", "amp_sum", "amp_min", "amp_max",
+    def per_doc(wav, did):
+        channels = 1 + did % 2
+        rate = 8000 if did % 3 == 0 else 16000
+        bit_depth = 8 if did % 5 == 0 else 16
+        m, h = (251, 125) if bit_depth == 8 else (4093, 2046)
+        n = 120 + did % 83
+        samples = [
+            (did * 37 + i * 17 + c * 29) % m - h
+            for i in range(n)
+            for c in range(channels)
         ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                channels = 1 + did % 2
-                rate = 8000 if did % 3 == 0 else 16000
-                bit_depth = 8 if did % 5 == 0 else 16
-                m, h = (251, 125) if bit_depth == 8 else (4093, 2046)
-                n = 120 + did % 83
-                samples = [
-                    (did * 37 + i * 17 + c * 29) % m - h
-                    for i in range(n)
-                    for c in range(channels)
-                ]
-                feats = decode_audio(
-                    encode_wav(rate, channels, samples, bit_depth)
-                )
-                assert feats["bit_depth"] == bit_depth
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "sample_rate": feats["sample_rate"],
-                        "channels": feats["channels"],
-                        "n_frames": feats["n_frames"],
-                        "duration_ms": feats["duration_ms"],
-                        "amp_sum": feats["amp_sum"],
-                        "amp_min": feats["amp_min"],
-                        "amp_max": feats["amp_max"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+        feats = wav.decode_audio(
+            wav.encode_wav(rate, channels, samples, bit_depth)
+        )
+        assert feats["bit_depth"] == bit_depth
+        yield feats
 
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, sample_rate int, channels int,"
-            " n_frames int, duration_ms int, amp_sum bigint,"
-            " amp_min int, amp_max int"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole WAV
-    # decode a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "wav",
+        "doc_id bigint, sample_rate int, channels int,"
+        " n_frames int, duration_ms int, amp_sum bigint,"
+        " amp_min int, amp_max int",
+        per_doc,
+        fan_out=False,
+    )
 
 
 @query(
@@ -1535,68 +1480,45 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard media scan: executor-side decode, output cardinality
     decided executor-side (one row per frame), no shuffle until the
     aggregate."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def run(batches):
+    def per_doc(avi, did):
         import numpy as np
-        import pandas as pd
 
-        from local_stream_stack_spark.operators.avi import (
-            decode_video,
-            encode_avi,
+        w, h, nf = 9 + did % 6, 5 + did % 4, 2 + did % 3
+        # vectorized synthetic-pixel generation (guide §4.2):
+        # same (did*7 + f*31 + 13y + 5x + 3c) % 256 bytes the
+        # per-pixel generator produced, via one broadcast per
+        # frame instead of w*h*3 Python iterations
+        grid = (
+            13 * np.arange(h, dtype=np.int64).reshape(h, 1, 1)
+            + 5 * np.arange(w, dtype=np.int64).reshape(1, w, 1)
+            + 3 * np.arange(3, dtype=np.int64).reshape(1, 1, 3)
         )
-
-        cols = [
-            "doc_id", "frame_idx", "width", "height",
-            "px_sum", "px_min", "px_max", "px_weighted",
+        frames = [
+            ((did * 7 + f * 31 + grid) % 256)
+            .astype(np.uint8)
+            .tobytes()
+            for f in range(nf)
         ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h, nf = 9 + did % 6, 5 + did % 4, 2 + did % 3
-                # vectorized synthetic-pixel generation (guide §4.2):
-                # same (did*7 + f*31 + 13y + 5x + 3c) % 256 bytes the
-                # per-pixel generator produced, via one broadcast per
-                # frame instead of w*h*3 Python iterations
-                grid = (
-                    13 * np.arange(h, dtype=np.int64).reshape(h, 1, 1)
-                    + 5 * np.arange(w, dtype=np.int64).reshape(1, w, 1)
-                    + 3 * np.arange(3, dtype=np.int64).reshape(1, 1, 3)
-                )
-                frames = [
-                    ((did * 7 + f * 31 + grid) % 256)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for f in range(nf)
-                ]
-                v = decode_video(encode_avi(w, h, frames, fps=10))
-                assert v["n_frames"] == nf
-                for idx, st in enumerate(v["frames"]):
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "frame_idx": idx,
-                            "width": v["width"],
-                            "height": v["height"],
-                            "px_sum": st["px_sum"],
-                            "px_min": st["px_min"],
-                            "px_max": st["px_max"],
-                            "px_weighted": st["px_weighted"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+        v = avi.decode_video(avi.encode_avi(w, h, frames, fps=10))
+        assert v["n_frames"] == nf
+        for idx, st in enumerate(v["frames"]):
+            yield {
+                **st,
+                "frame_idx": idx,
+                "width": v["width"],
+                "height": v["height"],
+            }
 
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, frame_idx int, width int, height int,"
-            " px_sum bigint, px_min int, px_max int, px_weighted bigint"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole AVI
-    # decode a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id", "frame_idx")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "avi",
+        "doc_id bigint, frame_idx int, width int, height int,"
+        " px_sum bigint, px_min int, px_max int, px_weighted bigint",
+        per_doc,
+        fan_out=False,
+        order=("doc_id", "frame_idx"),
+    )
 
 
 @query(
@@ -7587,74 +7509,37 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel swap, palette lookup, or RLE reassembly breaks the sums.
     Same fan-out note as JPEG/GIF: the id column is repartitioned
     because the testdata table is one small file."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.bmp import (
-            decode_image_bmp,
-            encode_bmp24,
-            encode_bmp_rle8,
-        )
-
-        pal = bytes(
+    def per_doc(bmp, did):
+        w1, h1 = 3 + did % 5, 2 + did % 3
+        rgb = bytes(
             v
-            for i in range(16)
-            for v in ((i * 13) % 256, (i * 29) % 256, (i * 7 + 3) % 256)
+            for y in range(h1)
+            for x in range(w1)
+            for v in (
+                (did + 3 * x + 7 * y) % 256,
+                (did * 5 + x) % 256,
+                (did * 11 + 2 * y) % 256,
+            )
         )
-        cols = [
-            "doc_id", "n_images", "n_px",
-            "r_sum", "g_sum", "b_sum", "r_min", "r_max",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w1, h1 = 3 + did % 5, 2 + did % 3
-                rgb = bytes(
-                    v
-                    for y in range(h1)
-                    for x in range(w1)
-                    for v in (
-                        (did + 3 * x + 7 * y) % 256,
-                        (did * 5 + x) % 256,
-                        (did * 11 + 2 * y) % 256,
-                    )
-                )
-                w2, h2 = 4 + did % 3, 3 + did % 2
-                idx = bytes(
-                    (did * 19 + 5 * x + 7 * y) % 16
-                    for y in range(h2)
-                    for x in range(w2)
-                )
-                a = decode_image_bmp(encode_bmp24(w1, h1, rgb))
-                b = decode_image_bmp(encode_bmp_rle8(w2, h2, idx, pal))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_images": 2,
-                        "n_px": a["n_px"] + b["n_px"],
-                        "r_sum": a["r_sum"] + b["r_sum"],
-                        "g_sum": a["g_sum"] + b["g_sum"],
-                        "b_sum": a["b_sum"] + b["b_sum"],
-                        "r_min": min(a["r_min"], b["r_min"]),
-                        "r_max": max(a["r_max"], b["r_max"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+        w2, h2 = 4 + did % 3, 3 + did % 2
+        idx = bytes(
+            (did * 19 + 5 * x + 7 * y) % 16
+            for y in range(h2)
+            for x in range(w2)
+        )
+        a = bmp.decode_image_bmp(bmp.encode_bmp24(w1, h1, rgb))
+        b = bmp.decode_image_bmp(bmp.encode_bmp_rle8(w2, h2, idx, _PALETTE16))
+        yield sum_image_stats(a, b)
 
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_images int, n_px bigint, r_sum bigint,"
-            " g_sum bigint, b_sum bigint, r_min int, r_max int"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "bmp",
+        "doc_id bigint, n_images int, n_px bigint, r_sum bigint,"
+        " g_sum bigint, b_sum bigint, r_min int, r_max int",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -8245,61 +8130,29 @@ def multimodal_qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     run bias, index hashing, or wrap arithmetic breaks the sums. Same
     fan-out note as JPEG/GIF/BMP: the id column is repartitioned
     because the testdata table is one small file."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.qoi import (
-            decode_qoi,
-            encode_qoi,
+    def per_doc(qoi, did):
+        w, h = 4 + did % 4, 3 + did % 3
+        rgb = bytes(
+            v
+            for y in range(h)
+            for x in range(w)
+            for v in (
+                (did + 2 * (x // 2) + 3 * y) % 256,
+                (did + 2 * (x // 2) + 3 * y + x % 3) % 256,
+                (did * 7 + 3 * y + 5) % 256,
+            )
         )
+        yield qoi.decode_qoi(qoi.encode_qoi(w, h, rgb, channels=3))
 
-        cols = [
-            "doc_id", "n_px",
-            "r_sum", "g_sum", "b_sum", "a_sum", "r_min", "r_max",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 4, 3 + did % 3
-                rgb = bytes(
-                    v
-                    for y in range(h)
-                    for x in range(w)
-                    for v in (
-                        (did + 2 * (x // 2) + 3 * y) % 256,
-                        (did + 2 * (x // 2) + 3 * y + x % 3) % 256,
-                        (did * 7 + 3 * y + 5) % 256,
-                    )
-                )
-                out = decode_qoi(encode_qoi(w, h, rgb, channels=3))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_px": out["n_px"],
-                        "r_sum": out["r_sum"],
-                        "g_sum": out["g_sum"],
-                        "b_sum": out["b_sum"],
-                        "a_sum": out["a_sum"],
-                        "r_min": out["r_min"],
-                        "r_max": out["r_max"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_px bigint, r_sum bigint, g_sum bigint,"
-            " b_sum bigint, a_sum bigint, r_min int, r_max int"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "qoi",
+        "doc_id bigint, n_px bigint, r_sum bigint, g_sum bigint,"
+        " b_sum bigint, a_sum bigint, r_min int, r_max int",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -8353,76 +8206,44 @@ def multimodal_tga_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     packet framing, BGR swap, or the bottom-up flip breaks the sums.
     Same fan-out note as the other codecs: the id column is
     repartitioned because the testdata table is one small file."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.tga import (
-            decode_tga,
-            encode_tga24,
-            encode_tga_rle24,
+    def per_doc(tga, did):
+        w1, h1 = 3 + did % 5, 2 + did % 4
+        rgb1 = bytes(
+            v
+            for y in range(h1)
+            for x in range(w1)
+            for v in (
+                (did + 4 * x + 9 * y) % 256,
+                (did * 3 + y) % 256,
+                (did * 13 + 2 * x) % 256,
+            )
         )
+        w2, h2 = 4 + did % 3, 2 + did % 3
+        rgb2 = bytes(
+            v
+            for y in range(h2)
+            for x in range(w2)
+            for v in (
+                ((did + x // 3 + 2 * y) * 17) % 256,
+                ((did + x // 3 + 2 * y) * 23 + 1) % 256,
+                ((did + x // 3 + 2 * y) * 5 + 9) % 256,
+            )
+        )
+        a = tga.decode_tga(tga.encode_tga24(w1, h1, rgb1))
+        b = tga.decode_tga(
+            tga.encode_tga_rle24(w2, h2, rgb2, top_origin=True)
+        )
+        yield sum_image_stats(a, b)
 
-        cols = [
-            "doc_id", "n_images", "n_px",
-            "r_sum", "g_sum", "b_sum", "r_min", "r_max",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w1, h1 = 3 + did % 5, 2 + did % 4
-                rgb1 = bytes(
-                    v
-                    for y in range(h1)
-                    for x in range(w1)
-                    for v in (
-                        (did + 4 * x + 9 * y) % 256,
-                        (did * 3 + y) % 256,
-                        (did * 13 + 2 * x) % 256,
-                    )
-                )
-                w2, h2 = 4 + did % 3, 2 + did % 3
-                rgb2 = bytes(
-                    v
-                    for y in range(h2)
-                    for x in range(w2)
-                    for v in (
-                        ((did + x // 3 + 2 * y) * 17) % 256,
-                        ((did + x // 3 + 2 * y) * 23 + 1) % 256,
-                        ((did + x // 3 + 2 * y) * 5 + 9) % 256,
-                    )
-                )
-                a = decode_tga(encode_tga24(w1, h1, rgb1))
-                b = decode_tga(
-                    encode_tga_rle24(w2, h2, rgb2, top_origin=True)
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_images": 2,
-                        "n_px": a["n_px"] + b["n_px"],
-                        "r_sum": a["r_sum"] + b["r_sum"],
-                        "g_sum": a["g_sum"] + b["g_sum"],
-                        "b_sum": a["b_sum"] + b["b_sum"],
-                        "r_min": min(a["r_min"], b["r_min"]),
-                        "r_max": max(a["r_max"], b["r_max"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_images int, n_px bigint, r_sum bigint,"
-            " g_sum bigint, b_sum bigint, r_min int, r_max int"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "tga",
+        "doc_id bigint, n_images int, n_px bigint, r_sum bigint,"
+        " g_sum bigint, b_sum bigint, r_min int, r_max int",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -8476,74 +8297,42 @@ def multimodal_pcx_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lossless, so the oracle recomputes the channel statistics
     arithmetically — a defect in RLE framing, plane deinterleave,
     line padding, or palette lookup breaks the sums."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.pcx import (
-            decode_pcx,
-            encode_pcx8,
-            encode_pcx24,
+    def per_doc(pcx, did):
+        pal = bytes(
+            (i * 3 + c * 7 + did) % 256
+            for i in range(256)
+            for c in range(3)
         )
+        w1, h1 = 3 + did % 4, 2 + did % 3
+        idx = bytes(
+            (did * 3 + 5 * x + 7 * y) % 256
+            for y in range(h1)
+            for x in range(w1)
+        )
+        w2, h2 = 4 + did % 3, 3 + did % 2
+        rgb = bytes(
+            v
+            for y in range(h2)
+            for x in range(w2)
+            for v in (
+                (x * 9 + y + did) % 256,
+                (x + y * 13) % 256,
+                (200 + x + did) % 256,
+            )
+        )
+        a = pcx.decode_pcx(pcx.encode_pcx8(w1, h1, idx, pal))
+        b = pcx.decode_pcx(pcx.encode_pcx24(w2, h2, rgb))
+        yield sum_image_stats(a, b)
 
-        cols = [
-            "doc_id", "n_images", "n_px",
-            "r_sum", "g_sum", "b_sum", "r_min", "r_max",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                pal = bytes(
-                    (i * 3 + c * 7 + did) % 256
-                    for i in range(256)
-                    for c in range(3)
-                )
-                w1, h1 = 3 + did % 4, 2 + did % 3
-                idx = bytes(
-                    (did * 3 + 5 * x + 7 * y) % 256
-                    for y in range(h1)
-                    for x in range(w1)
-                )
-                w2, h2 = 4 + did % 3, 3 + did % 2
-                rgb = bytes(
-                    v
-                    for y in range(h2)
-                    for x in range(w2)
-                    for v in (
-                        (x * 9 + y + did) % 256,
-                        (x + y * 13) % 256,
-                        (200 + x + did) % 256,
-                    )
-                )
-                a = decode_pcx(encode_pcx8(w1, h1, idx, pal))
-                b = decode_pcx(encode_pcx24(w2, h2, rgb))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_images": 2,
-                        "n_px": a["n_px"] + b["n_px"],
-                        "r_sum": a["r_sum"] + b["r_sum"],
-                        "g_sum": a["g_sum"] + b["g_sum"],
-                        "b_sum": a["b_sum"] + b["b_sum"],
-                        "r_min": min(a["r_min"], b["r_min"]),
-                        "r_max": max(a["r_max"], b["r_max"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_images int, n_px bigint, r_sum bigint,"
-            " g_sum bigint, b_sum bigint, r_min int, r_max int"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "pcx",
+        "doc_id bigint, n_images int, n_px bigint, r_sum bigint,"
+        " g_sum bigint, b_sum bigint, r_min int, r_max int",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -8599,90 +8388,59 @@ def multimodal_ico_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     or channel-swap defect breaks the sums. Same fan-out note as
     JPEG/GIF/BMP/QOI: the id column is repartitioned because the
     testdata table is one small file."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.ico import (
-            decode_ico,
-            encode_ico,
+    def per_doc(ico, did):
+        w1, h1 = 3 + did % 4, 2 + did % 3
+        png_rgba = bytes(
+            v
+            for y in range(h1)
+            for x in range(w1)
+            for v in (
+                (did + x) % 256,
+                (did * 3 + y) % 256,
+                (x * y + 5) % 256,
+                255,
+            )
+        )
+        w2, h2 = 4 + did % 3, 2 + did % 2
+        dib_rgba = bytes(
+            v
+            for y in range(h2)
+            for x in range(w2)
+            for v in (
+                (did * 7 + x) % 256,
+                (y * 9) % 256,
+                (did + x + y) % 256,
+                0 if (x + y + did) % 7 == 0 else 200,
+            )
+        )
+        yield ico.decode_ico(
+            ico.encode_ico(
+                [
+                    {
+                        "width": w1,
+                        "height": h1,
+                        "kind": "png",
+                        "rgba": png_rgba,
+                    },
+                    {
+                        "width": w2,
+                        "height": h2,
+                        "kind": "dib",
+                        "rgba": dib_rgba,
+                    },
+                ]
+            )
         )
 
-        cols = [
-            "doc_id", "n_members", "n_px",
-            "r_sum", "g_sum", "b_sum", "a_sum",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w1, h1 = 3 + did % 4, 2 + did % 3
-                png_rgba = bytes(
-                    v
-                    for y in range(h1)
-                    for x in range(w1)
-                    for v in (
-                        (did + x) % 256,
-                        (did * 3 + y) % 256,
-                        (x * y + 5) % 256,
-                        255,
-                    )
-                )
-                w2, h2 = 4 + did % 3, 2 + did % 2
-                dib_rgba = bytes(
-                    v
-                    for y in range(h2)
-                    for x in range(w2)
-                    for v in (
-                        (did * 7 + x) % 256,
-                        (y * 9) % 256,
-                        (did + x + y) % 256,
-                        0 if (x + y + did) % 7 == 0 else 200,
-                    )
-                )
-                out = decode_ico(
-                    encode_ico(
-                        [
-                            {
-                                "width": w1,
-                                "height": h1,
-                                "kind": "png",
-                                "rgba": png_rgba,
-                            },
-                            {
-                                "width": w2,
-                                "height": h2,
-                                "kind": "dib",
-                                "rgba": dib_rgba,
-                            },
-                        ]
-                    )
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_members": out["n_members"],
-                        "n_px": out["n_px"],
-                        "r_sum": out["r_sum"],
-                        "g_sum": out["g_sum"],
-                        "b_sum": out["b_sum"],
-                        "a_sum": out["a_sum"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_members int, n_px bigint, r_sum bigint,"
-            " g_sum bigint, b_sum bigint, a_sum bigint"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "ico",
+        "doc_id bigint, n_members int, n_px bigint, r_sum bigint,"
+        " g_sum bigint, b_sum bigint, a_sum bigint",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -9552,67 +9310,37 @@ def multimodal_midi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tick totals purely arithmetically — a defect in VLQ decoding,
     running-status reuse, or the vel-0-is-off rule breaks the sums.
     This closes the symbolic-audio modality next to WAV's PCM one."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.midi import (
-            decode_midi,
-            encode_midi,
-        )
-
-        cols = [
-            "doc_id", "n_tracks", "n_notes",
-            "pitch_sum", "velocity_sum", "ticks_max",
+    def per_doc(midi, did):
+        n1, n2 = 3 + did % 5, 2 + did % 3
+        tr1 = [
+            (
+                10 + i,
+                (did * 7 + 5 * i) % 128,
+                (did + 11 * i) % 127 + 1,
+                20 + (i % 7),
+            )
+            for i in range(n1)
         ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n1, n2 = 3 + did % 5, 2 + did % 3
-                tr1 = [
-                    (
-                        10 + i,
-                        (did * 7 + 5 * i) % 128,
-                        (did + 11 * i) % 127 + 1,
-                        20 + (i % 7),
-                    )
-                    for i in range(n1)
-                ]
-                tr2 = [
-                    (
-                        5 + 2 * i,
-                        (did * 3 + 9 * i) % 128,
-                        (did * 5 + i) % 127 + 1,
-                        30 + i,
-                    )
-                    for i in range(n2)
-                ]
-                out = decode_midi(encode_midi([tr1, tr2]))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_tracks": out["n_tracks"],
-                        "n_notes": out["n_notes"],
-                        "pitch_sum": out["pitch_sum"],
-                        "velocity_sum": out["velocity_sum"],
-                        "ticks_max": out["ticks_max"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+        tr2 = [
+            (
+                5 + 2 * i,
+                (did * 3 + 9 * i) % 128,
+                (did * 5 + i) % 127 + 1,
+                30 + i,
+            )
+            for i in range(n2)
+        ]
+        yield midi.decode_midi(midi.encode_midi([tr1, tr2]))
 
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_tracks int, n_notes bigint,"
-            " pitch_sum bigint, velocity_sum bigint, ticks_max bigint"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "midi",
+        "doc_id bigint, n_tracks int, n_notes bigint,"
+        " pitch_sum bigint, velocity_sum bigint, ticks_max bigint",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -9682,58 +9410,35 @@ def multimodal_au_g711_decode(
     byte — a defect in the complement/XOR fold, segment shift, bias,
     or either law's sign convention breaks the sums. Closes the
     companded-telephony-audio modality next to WAV's linear PCM."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.au import (
-            decode_au,
-            encode_au,
+    def per_doc(au, did):
+        n1, n2 = 40 + did % 17, 30 + did % 13
+        mu_body = bytes(
+            (did * 13 + 7 * i) % 256 for i in range(n1)
         )
+        al_body = bytes(
+            (did * 11 + 5 * i) % 256 for i in range(n2)
+        )
+        a = au.decode_au(
+            au.encode_au(mu_body, encoding=1, annotation=b"lss\x00")
+        )
+        b = au.decode_au(au.encode_au(al_body, encoding=27))
+        yield {
+            "n_samples": a["n_samples"] + b["n_samples"],
+            "pcm_sum": a["pcm_sum"] + b["pcm_sum"],
+            "abs_sum": a["abs_sum"] + b["abs_sum"],
+            "pcm_min": min(a["pcm_min"], b["pcm_min"]),
+            "pcm_max": max(a["pcm_max"], b["pcm_max"]),
+        }
 
-        cols = [
-            "doc_id", "n_samples", "pcm_sum",
-            "abs_sum", "pcm_min", "pcm_max",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n1, n2 = 40 + did % 17, 30 + did % 13
-                mu_body = bytes(
-                    (did * 13 + 7 * i) % 256 for i in range(n1)
-                )
-                al_body = bytes(
-                    (did * 11 + 5 * i) % 256 for i in range(n2)
-                )
-                a = decode_au(
-                    encode_au(mu_body, encoding=1, annotation=b"lss\x00")
-                )
-                b = decode_au(encode_au(al_body, encoding=27))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_samples": a["n_samples"] + b["n_samples"],
-                        "pcm_sum": a["pcm_sum"] + b["pcm_sum"],
-                        "abs_sum": a["abs_sum"] + b["abs_sum"],
-                        "pcm_min": min(a["pcm_min"], b["pcm_min"]),
-                        "pcm_max": max(a["pcm_max"], b["pcm_max"]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_samples bigint, pcm_sum bigint,"
-            " abs_sum bigint, pcm_min bigint, pcm_max bigint"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "au",
+        "doc_id bigint, n_samples bigint, pcm_sum bigint,"
+        " abs_sum bigint, pcm_min bigint, pcm_max bigint",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -9794,79 +9499,44 @@ def multimodal_pnm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescale ⇒ the oracle recomputes every channel statistic
     arithmetically; a defect in the binary separator, row packing,
     byte order, or maxval scaling breaks the sums."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.pnm import (
-            decode_pnm,
-            encode_pnm,
-        )
-
-        cols = [
-            "doc_id", "n_images", "n_px",
-            "r_sum", "g_sum", "b_sum", "r_min", "r_max",
+    def per_doc(pnm, did):
+        w1, h1 = 3 + did % 4, 2 + did % 3
+        rgb = [
+            v
+            for y in range(h1)
+            for x in range(w1)
+            for v in (
+                (did + 2 * x) % 256,
+                (did * 3 + y) % 256,
+                (x + y + did) % 256,
+            )
         ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w1, h1 = 3 + did % 4, 2 + did % 3
-                rgb = [
-                    v
-                    for y in range(h1)
-                    for x in range(w1)
-                    for v in (
-                        (did + 2 * x) % 256,
-                        (did * 3 + y) % 256,
-                        (x + y + did) % 256,
-                    )
-                ]
-                w2, h2 = 4 + did % 3, 2 + did % 2
-                grays = [
-                    (did * 37 + 13 * x + 29 * y) % 1024
-                    for y in range(h2)
-                    for x in range(w2)
-                ]
-                w3, h3 = 5 + did % 4, 2
-                bits = [
-                    (x + y + did) % 2
-                    for y in range(h3)
-                    for x in range(w3)
-                ]
-                a = decode_pnm(encode_pnm("P6", w1, h1, rgb, 255))
-                b = decode_pnm(encode_pnm("P5", w2, h2, grays, 1023))
-                c = decode_pnm(encode_pnm("P4", w3, h3, bits))
-                rs = (
-                    a["pixels"][0::4] + b["pixels"][0::4]
-                    + c["pixels"][0::4]
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_images": 3,
-                        "n_px": a["n_px"] + b["n_px"] + c["n_px"],
-                        "r_sum": a["r_sum"] + b["r_sum"] + c["r_sum"],
-                        "g_sum": a["g_sum"] + b["g_sum"] + c["g_sum"],
-                        "b_sum": a["b_sum"] + b["b_sum"] + c["b_sum"],
-                        "r_min": min(rs),
-                        "r_max": max(rs),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+        w2, h2 = 4 + did % 3, 2 + did % 2
+        grays = [
+            (did * 37 + 13 * x + 29 * y) % 1024
+            for y in range(h2)
+            for x in range(w2)
+        ]
+        w3, h3 = 5 + did % 4, 2
+        bits = [
+            (x + y + did) % 2
+            for y in range(h3)
+            for x in range(w3)
+        ]
+        a = pnm.decode_pnm(pnm.encode_pnm("P6", w1, h1, rgb, 255))
+        b = pnm.decode_pnm(pnm.encode_pnm("P5", w2, h2, grays, 1023))
+        c = pnm.decode_pnm(pnm.encode_pnm("P4", w3, h3, bits))
+        yield sum_image_stats(a, b, c)
 
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_images int, n_px bigint, r_sum bigint,"
-            " g_sum bigint, b_sum bigint, r_min int, r_max int"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "pnm",
+        "doc_id bigint, n_images int, n_px bigint, r_sum bigint,"
+        " g_sum bigint, b_sum bigint, r_min int, r_max int",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -10135,75 +9805,51 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing breaks the sums. Same fan-out note as the other codecs:
     the id column is repartitioned because the testdata table is one
     small file."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.tiff import (
-            decode_tiff,
-            encode_tiff_gray8,
-            encode_tiff_rgb8,
+    def per_doc(tiff, did):
+        w1, h1 = 3 + did % 5, 2 + did % 4
+        gray = bytes(
+            (did * 7 + 5 * x + 3 * y) % 256
+            for y in range(h1)
+            for x in range(w1)
         )
+        w2, h2 = 4 + did % 3, 2 + did % 3
+        rgb = bytes(
+            v
+            for y in range(h2)
+            for x in range(w2)
+            for v in (
+                (did + 11 * x + y) % 256,
+                (did * 5 + x) % 256,
+                (did * 9 + 4 * y) % 256,
+            )
+        )
+        a = tiff.decode_tiff(
+            tiff.encode_tiff_gray8(w1, h1, gray, rows_per_strip=2)
+        )
+        b = tiff.decode_tiff(
+            tiff.encode_tiff_rgb8(w2, h2, rgb, big_endian=True)
+        )
+        yield {
+            "n_images": 2,
+            "n_px": a["n_px"] + b["n_px"],
+            "gray_sum": a["r_sum"],
+            "gmin": a["s_min"],
+            "gmax": a["s_max"],
+            "r_sum": b["r_sum"],
+            "g_sum": b["g_sum"],
+            "b_sum": b["b_sum"],
+        }
 
-        cols = [
-            "doc_id", "n_images", "n_px",
-            "gray_sum", "gmin", "gmax", "r_sum", "g_sum", "b_sum",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w1, h1 = 3 + did % 5, 2 + did % 4
-                gray = bytes(
-                    (did * 7 + 5 * x + 3 * y) % 256
-                    for y in range(h1)
-                    for x in range(w1)
-                )
-                w2, h2 = 4 + did % 3, 2 + did % 3
-                rgb = bytes(
-                    v
-                    for y in range(h2)
-                    for x in range(w2)
-                    for v in (
-                        (did + 11 * x + y) % 256,
-                        (did * 5 + x) % 256,
-                        (did * 9 + 4 * y) % 256,
-                    )
-                )
-                a = decode_tiff(
-                    encode_tiff_gray8(w1, h1, gray, rows_per_strip=2)
-                )
-                b = decode_tiff(
-                    encode_tiff_rgb8(w2, h2, rgb, big_endian=True)
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_images": 2,
-                        "n_px": a["n_px"] + b["n_px"],
-                        "gray_sum": a["r_sum"],
-                        "gmin": a["s_min"],
-                        "gmax": a["s_max"],
-                        "r_sum": b["r_sum"],
-                        "g_sum": b["g_sum"],
-                        "b_sum": b["b_sum"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_images int, n_px bigint, gray_sum bigint,"
-            " gmin int, gmax int, r_sum bigint, g_sum bigint,"
-            " b_sum bigint"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "tiff",
+        "doc_id bigint, n_images int, n_px bigint, gray_sum bigint,"
+        " gmin int, gmax int, r_sum bigint, g_sum bigint,"
+        " b_sum bigint",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -10259,69 +9905,32 @@ def multimodal_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     No audio decode (that is the documented capability boundary).
     Same fan-out note as the other codecs: the id column is
     repartitioned because the testdata table is one small file."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.mp3 import (
-            decode_mp3_meta,
-            encode_mp3,
+    def per_doc(mp3, did):
+        n = 4 + did % 5
+        if did % 2 == 0:
+            idxs = [1 + did % 14] * n
+        else:
+            idxs = [1 + (did + 3 * i) % 14 for i in range(n)]
+        raw = mp3.encode_mp3(
+            idxs,
+            samplerate_idx=did % 3,
+            paddings=[(did + i) % 2 for i in range(n)],
+            id3_size=(did % 7) * 5 if did % 7 else 0,
+            xing=did % 2 == 1,
         )
+        yield mp3.decode_mp3_meta(raw)
 
-        cols = [
-            "doc_id", "n_frames", "sample_rate", "duration_us",
-            "kbps_min", "kbps_max", "kbps_sum", "n_bytes",
-            "is_vbr", "has_xing", "xing_frames", "id3_bytes",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 4 + did % 5
-                if did % 2 == 0:
-                    idxs = [1 + did % 14] * n
-                else:
-                    idxs = [1 + (did + 3 * i) % 14 for i in range(n)]
-                raw = encode_mp3(
-                    idxs,
-                    samplerate_idx=did % 3,
-                    paddings=[(did + i) % 2 for i in range(n)],
-                    id3_size=(did % 7) * 5 if did % 7 else 0,
-                    xing=did % 2 == 1,
-                )
-                m = decode_mp3_meta(raw)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": m["n_frames"],
-                        "sample_rate": m["sample_rate"],
-                        "duration_us": m["duration_us"],
-                        "kbps_min": m["kbps_min"],
-                        "kbps_max": m["kbps_max"],
-                        "kbps_sum": m["kbps_sum"],
-                        "n_bytes": m["n_bytes"] ,
-                        "is_vbr": m["is_vbr"],
-                        "has_xing": m["has_xing"],
-                        "xing_frames": m["xing_frames"],
-                        "id3_bytes": m["id3_bytes"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_frames bigint, sample_rate int,"
-            " duration_us bigint, kbps_min int, kbps_max int,"
-            " kbps_sum bigint, n_bytes bigint, is_vbr int,"
-            " has_xing int, xing_frames bigint, id3_bytes bigint"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "mp3",
+        "doc_id bigint, n_frames bigint, sample_rate int,"
+        " duration_us bigint, kbps_min int, kbps_max int,"
+        " kbps_sum bigint, n_bytes bigint, is_vbr int,"
+        " has_xing int, xing_frames bigint, id3_bytes bigint",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(
@@ -10375,68 +9984,33 @@ def multimodal_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Rice/LPC subframes) is the documented capability boundary.  Same
     fan-out note as the other codecs: the id column is repartitioned
     because the testdata table is one small file."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def run(batches):
-        import pandas as pd
-
-        from local_stream_stack_spark.operators.flac import (
-            decode_flac_meta,
-            encode_flac_meta,
+    def per_doc(flac, did):
+        sr = [32000, 44100, 48000][did % 3]
+        raw = flac.encode_flac_meta(
+            sample_rate=sr,
+            channels=1 + did % 2,
+            bits_per_sample=16 + 8 * (did % 2),
+            total_samples=sr * (1 + did % 4) + did % 1000,
+            block_size=1024,
+            padding=(did % 5) * 7,
+            vorbis_comments=did % 4,
+            audio_bytes=50 + did % 20,
         )
+        m = flac.decode_flac_meta(raw)
+        assert m["valid"] == 1
+        yield m
 
-        cols = [
-            "doc_id", "sample_rate", "channels", "bits_per_sample",
-            "total_samples", "duration_us", "n_blocks",
-            "padding_bytes", "vorbis_comments", "meta_bytes", "n_bytes",
-        ]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                sr = [32000, 44100, 48000][did % 3]
-                raw = encode_flac_meta(
-                    sample_rate=sr,
-                    channels=1 + did % 2,
-                    bits_per_sample=16 + 8 * (did % 2),
-                    total_samples=sr * (1 + did % 4) + did % 1000,
-                    block_size=1024,
-                    padding=(did % 5) * 7,
-                    vorbis_comments=did % 4,
-                    audio_bytes=50 + did % 20,
-                )
-                m = decode_flac_meta(raw)
-                assert m["valid"] == 1
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "sample_rate": m["sample_rate"],
-                        "channels": m["channels"],
-                        "bits_per_sample": m["bits_per_sample"],
-                        "total_samples": m["total_samples"],
-                        "duration_us": m["duration_us"],
-                        "n_blocks": m["n_blocks"],
-                        "padding_bytes": m["padding_bytes"],
-                        "vorbis_comments": m["vorbis_comments"],
-                        "meta_bytes": m["meta_bytes"],
-                        "n_bytes": m["n_bytes"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return d.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, sample_rate bigint, channels int,"
-            " bits_per_sample int, total_samples bigint,"
-            " duration_us bigint, n_blocks int, padding_bytes bigint,"
-            " vorbis_comments bigint, meta_bytes bigint, n_bytes bigint"
-        ),
-    # pin before the global sort: narrow scan->decode subtree below,
-    # so the sort's bound-sampling job would re-run the whole decode
-    # a second time (guide §5)
-    ).localCheckpoint(eager=True).orderBy("doc_id")
+    return decoded_stats_query(
+        spark,
+        sf_dir,
+        "flac",
+        "doc_id bigint, sample_rate bigint, channels int,"
+        " bits_per_sample int, total_samples bigint,"
+        " duration_us bigint, n_blocks int, padding_bytes bigint,"
+        " vorbis_comments bigint, meta_bytes bigint, n_bytes bigint",
+        per_doc,
+        fan_out=True,
+    )
 
 
 @query(

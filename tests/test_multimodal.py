@@ -141,3 +141,42 @@ def test_extract_features_decodes_real_gif(spark):
     )
     row = extract_features(df).collect()[0]
     assert (row.width, row.height) == (31, 17)
+
+
+def test_decoded_stats_query_rows_follow_the_schema(spark, sf_dir):
+    """The shared codec-query skeleton fills doc_id, picks the other
+    schema columns by name from each yielded dict (extra keys are
+    ignored), expands a doc into several rows, and sorts by
+    ``order``."""
+    from local_stream_stack_spark.queries.llm import decoded_stats_query
+
+    def per_doc(png, did):
+        for k in range(did % 3):
+            yield {"k": k, "twice": 2 * did, "ignored": png.__name__}
+
+    df = decoded_stats_query(
+        spark, sf_dir, "png", "doc_id bigint, k int, twice bigint",
+        per_doc, fan_out=True, order=("doc_id", "k"),
+    )
+    assert df.columns == ["doc_id", "k", "twice"]
+    ids = sorted(
+        r.doc_id for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id").collect()
+    )
+    want = [(d, k, 2 * d) for d in ids for k in range(d % 3)]
+    assert [tuple(r) for r in df.collect()] == want
+
+
+def test_decoded_stats_query_missing_field_fails_the_task(spark, sf_dir):
+    """A decoder dict without a schema column fails loudly instead of
+    turning into a null (the eager pin runs the decode)."""
+    from local_stream_stack_spark.queries.llm import decoded_stats_query
+
+    def per_doc(png, did):
+        yield {"width": 1}
+
+    with pytest.raises(Exception, match="KeyError"):
+        decoded_stats_query(
+            spark, sf_dir, "png", "doc_id bigint, width int, height int",
+            per_doc, fan_out=False,
+        ).collect()

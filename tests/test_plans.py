@@ -442,3 +442,49 @@ def test_sort_sampling_guard_pinned_family_clean(spark):
         # range exchange in these queries
         assert "Exchange rangepartitioning" in plan, name
         assert range_exchange_hazards(plan) == [], name
+
+
+# The real-codec queries built on llm.decoded_stats_query. The id
+# column fans out to the session parallelism before the decode in all
+# but three of them (the testdata documents table is one input split).
+CODEC_FAN_OUT = [
+    "multimodal_jpeg_decode",
+    "multimodal_gif_decode",
+    "multimodal_bmp_decode",
+    "multimodal_qoi_decode",
+    "multimodal_tga_decode",
+    "multimodal_pcx_decode",
+    "multimodal_ico_decode",
+    "multimodal_midi_decode",
+    "multimodal_au_g711_decode",
+    "multimodal_pnm_decode",
+    "multimodal_tiff_decode",
+    "multimodal_mp3_meta",
+    "multimodal_flac_meta",
+]
+CODEC_SINGLE_SPLIT = [
+    "multimodal_png_decode",
+    "multimodal_wav_decode",
+    "multimodal_video_frames",
+]
+
+
+@pytest.mark.parametrize("name", CODEC_FAN_OUT + CODEC_SINGLE_SPLIT)
+def test_codec_query_fan_out_sits_below_the_pin(spark, monkeypatch, name):
+    """The fan-out is invisible in the final plan (the pin turns the
+    decode into ``Scan ExistingRDD``), so the DataFrame handed to the
+    pin is captured instead, without running it: it must hold the
+    mapInPandas decode, over a round-robin exchange exactly for the
+    fan-out queries."""
+    pinned = []
+
+    def record(self, *args, **kwargs):
+        pinned.append(self)
+        return self
+
+    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", record)
+    QUERIES[name].fn(spark, SF)
+    assert len(pinned) == 1
+    plan = pinned[0]._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert ("RoundRobinPartitioning" in plan) == (name in CODEC_FAN_OUT)

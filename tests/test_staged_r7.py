@@ -1,18 +1,25 @@
-"""Oracle parity for the eight round-7 batch queries — the exact
-Spark-vs-DuckDB compare the driver gate runs, executed in pytest.
-These were implemented in round 6 behind a staging map (the driver
-window was full), registered in round 7, and moved verbatim to their
-home modules in round 8; this test now reads them straight from the
-registry so the pytest-level parity gate survives the move."""
+"""Oracle parity in pytest — the exact Spark-vs-DuckDB compare of
+``tools/check_parity.compare``, for two groups:
+
+- the eight round-7 batch queries. These were implemented in round 6
+  behind a staging map (the registered-query window was full), registered in
+  round 7, and moved verbatim to their home modules in round 8; this
+  test reads them straight from the registry so the pytest-level
+  parity gate survives the move.
+- the 16 real-codec ``multimodal_*`` queries, which share the
+  ``llm.decoded_stats_query`` skeleton: one exact check each, so a
+  change to the shared helper is caught by the default tier and not
+  only by a manual ``tools/check_parity.py`` run."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir, "tools"))
 from check_parity import TABLES, compare  # noqa: E402
 
 from local_stream_stack_spark.queries import QUERIES  # noqa: E402
@@ -31,8 +38,27 @@ R7_BATCH = [
 ]
 
 
-@pytest.mark.parametrize("name", R7_BATCH)
-def test_r7_batch_query_is_exact_vs_oracle(spark, name):
+CODEC_QUERIES = [
+    "multimodal_png_decode",
+    "multimodal_jpeg_decode",
+    "multimodal_gif_decode",
+    "multimodal_wav_decode",
+    "multimodal_video_frames",
+    "multimodal_bmp_decode",
+    "multimodal_qoi_decode",
+    "multimodal_tga_decode",
+    "multimodal_pcx_decode",
+    "multimodal_ico_decode",
+    "multimodal_midi_decode",
+    "multimodal_au_g711_decode",
+    "multimodal_pnm_decode",
+    "multimodal_tiff_decode",
+    "multimodal_mp3_meta",
+    "multimodal_flac_meta",
+]
+
+
+def _assert_exact_vs_oracle(spark, name):
     spec = QUERIES[name]
     sdf = spec.fn(spark, SF)
     spark_cols = sdf.columns
@@ -51,3 +77,13 @@ def test_r7_batch_query_is_exact_vs_oracle(spark, name):
         spark_rows, spark_cols, duck_rows, duck_cols
     )
     assert exact, f"{name}: {issues[:5]}"
+
+
+@pytest.mark.parametrize("name", R7_BATCH)
+def test_r7_batch_query_is_exact_vs_oracle(spark, name):
+    _assert_exact_vs_oracle(spark, name)
+
+
+@pytest.mark.parametrize("name", CODEC_QUERIES)
+def test_codec_query_is_exact_vs_oracle(spark, name):
+    _assert_exact_vs_oracle(spark, name)
