@@ -20,8 +20,8 @@ GENERATION per column family and commits the fold atomically:
   family, the highest epoch id folded into the generation
   (``fold_max``) and the bucket layout.  The manifest is written to a
   temp name and renamed — the single-file rename is the atomic commit
-  point, exactly the protocol of ``_write_manifest_atomic`` in
-  ``ops.py``;
+  point, the one protocol of :func:`txlog.commit` that the
+  latest-per-key upsert's epoch manifests use too;
 - readers resolve the LATEST committed generation and read
   ``__gen=<g>`` plus only the live epoch directories with
   ``epoch > fold_max`` — a crash mid-compaction leaves an
@@ -48,131 +48,21 @@ training-data-pipeline surface the north star adds on top.
 
 from __future__ import annotations
 
-import json
-import re
-
 from pyspark.sql import DataFrame, functions as F
 
+from local_stream_stack_spark.streaming import txlog
+
 _GEN_DIR = "_generations"
-
-
-# --------------------------------------------------------------------------
-# Hadoop FS helpers (driver-side metadata ops — no Spark job per call)
-# --------------------------------------------------------------------------
-
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _glob_epoch_ids(spark, family_path: str) -> list[int]:
-    """Sorted epoch ids present as ``__epoch=<id>`` children."""
-    fs, _, jvm = _fs(spark, family_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    statuses = fs.globStatus(Path(family_path.rstrip("/") + "/__epoch=*"))
-    out = []
-    for st in statuses or []:
-        m = re.fullmatch(r"__epoch=(-?\d+)", st.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _committed_epoch_ids(spark, family_path: str) -> list[int]:
-    """Epoch ids whose directory carries the job-commit ``_SUCCESS``
-    marker.  A micro-batch writer racing the compactor creates its
-    ``__epoch=<id>`` directory BEFORE the parquet job commits its task
-    files — folding that listing would record ``fold_max`` over a torn
-    (possibly empty) read and lose the epoch's rows forever.  The
-    compactor therefore folds only committed epochs; an in-flight one
-    is left alone (neither folded nor deferred) and folds next run."""
-    fs, _, jvm = _fs(spark, family_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    out = []
-    for e in _glob_epoch_ids(spark, family_path):
-        if fs.exists(
-            Path(f"{family_path.rstrip('/')}/__epoch={e}/_SUCCESS")
-        ):
-            out.append(e)
-    return out
-
-
-def _glob_bucket_ids(spark, gen_dir: str) -> set[int]:
-    """Bucket ids present as ``__bucket=<id>`` children of a
-    generation directory (``partitionBy`` writes only non-empty
-    buckets)."""
-    fs, _, jvm = _fs(spark, gen_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    statuses = fs.globStatus(Path(gen_dir.rstrip("/") + "/__bucket=*"))
-    out = set()
-    for st in statuses or []:
-        m = re.fullmatch(r"__bucket=(\d+)", st.getPath().getName())
-        if m:
-            out.add(int(m.group(1)))
-    return out
-
-
-def _atomic_write_json(spark, dir_path: str, name: str, payload: dict) -> None:
-    """Write ``<dir>/<name>.json`` via temp + rename (atomic commit).
-    The temp has no ``.json`` suffix so a crash leftover can never be
-    parsed as a committed manifest."""
-    fs, _, jvm = _fs(spark, dir_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(Path(dir_path))
-    tmp = Path(f"{dir_path}/.tmp-{name}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
-    final = Path(f"{dir_path}/{name}.json")
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"generation manifest commit failed: {name}")
-
-
-def _read_generations(spark, store_path: str) -> dict[int, dict]:
-    """{gen: manifest} for every COMMITTED generation manifest."""
-    mdir = store_path.rstrip("/") + "/" + _GEN_DIR
-    fs, _, jvm = _fs(spark, mdir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(mdir)):
-        return {}
-    out: dict[int, dict] = {}
-    for st in fs.globStatus(Path(mdir + "/*.json")) or []:
-        # strict commit-name filter, same rationale as _read_manifests
-        if not re.fullmatch(r"\d+\.json", st.getPath().getName()):
-            continue
-        stream = fs.open(st.getPath())
-        try:
-            text = (
-                jvm.java.util.Scanner(stream, "UTF-8")
-                .useDelimiter("\\A")
-                .next()
-            )
-        finally:
-            stream.close()
-        m = json.loads(text)
-        out[int(m["gen"])] = m
-    return out
 
 
 def latest_generation(spark, store_path: str):
     """(gen_id, manifest) of the newest committed generation, or
     (None, None) if the store has never been compacted."""
-    gens = _read_generations(spark, store_path)
+    gens = txlog.read_commits(spark, store_path.rstrip("/") + "/" + _GEN_DIR)
     if not gens:
         return None, None
     g = max(gens)
     return g, gens[g]
-
-
-def _delete(spark, path: str) -> None:
-    fs, p, _ = _fs(spark, path)
-    fs.delete(p, True)
 
 
 # --------------------------------------------------------------------------
@@ -237,7 +127,7 @@ def read_family(
             # only non-empty buckets exist as directories (an all-empty
             # fold writes none); prune the request to what's on disk so
             # the scan never 404s
-            existing = _glob_bucket_ids(spark, gen_dir)
+            existing = set(txlog.partition_ids(spark, gen_dir, "__bucket"))
             wanted = (
                 existing
                 if bucket_in is None
@@ -259,7 +149,11 @@ def read_family(
     # creates its __epoch dir before the parquet job commits, and a
     # torn dir either crashes schema inference (empty) or silently
     # returns partial rows — same rule the fold path applies
-    live = [e for e in _committed_epoch_ids(spark, fpath) if e > fold_max]
+    live = [
+        e
+        for e in txlog.partition_ids(spark, fpath, committed=True)
+        if e > fold_max
+    ]
     if live:
         parts.append(
             spark.read.option("basePath", fpath).parquet(
@@ -358,7 +252,7 @@ def compact_store(
         # directories superseded by the PREVIOUS fold have had their
         # one-cycle grace window — delete them now
         for path in prev_defer:
-            _delete(spark, path)
+            txlog.delete(spark, path)
     else:
         # no vacuum this run: keep the backlog tracked so a future
         # vacuum=True run can collect it (ADVICE r12)
@@ -388,7 +282,7 @@ def compact_store(
         # (_SUCCESS) epochs only — a dir mid-write by a racing
         # micro-batch is neither folded nor deferred (it folds next
         # run once its job commit lands).
-        all_epochs = _committed_epoch_ids(spark, fpath)
+        all_epochs = txlog.partition_ids(spark, fpath, committed=True)
         epochs = [e for e in all_epochs if e > prev_fold_max]
         if epochs:
             parts.append(
@@ -442,11 +336,8 @@ def compact_store(
     # dedupe (a vacuum=False chain re-lists still-present epoch dirs
     # that are also carried forward) while preserving order
     manifest["defer_vacuum"] = list(dict.fromkeys(manifest["defer_vacuum"]))
-    _atomic_write_json(
-        spark,
-        store_path.rstrip("/") + "/" + _GEN_DIR,
-        str(new_gen),
-        manifest,
+    txlog.commit(
+        spark, store_path.rstrip("/") + "/" + _GEN_DIR, new_gen, manifest
     )
     return new_gen
 
@@ -482,7 +373,7 @@ def auto_compact_if_due(
     if gen is not None and probe_family in manifest["families"]:
         fold_max = int(manifest["families"][probe_family]["fold_max"])
     fpath = _family_path(store_path, probe_family)
-    live = [e for e in _glob_epoch_ids(spark, fpath) if e > fold_max]
+    live = [e for e in txlog.partition_ids(spark, fpath) if e > fold_max]
     if len(live) >= every_n:
         return compactor()
     return None

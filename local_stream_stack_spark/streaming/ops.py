@@ -16,11 +16,12 @@ standard Structured Streaming plan:
 
 from __future__ import annotations
 
-import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from local_stream_stack_spark.streaming import compaction, txlog
 
 
 def windowed_counts(
@@ -222,22 +223,31 @@ def latest_per_key_stream_parquet(
     only an invisible orphan tree, not a torn bucket (the failure
     window the previous dynamic-partition-overwrite form documented
     as open). Replayed epochs rewrite their own epoch dir + manifest
-    from the pre-N state, so checkpoint recovery converges; committed
-    superseded bucket dirs are garbage-collected best-effort one epoch
-    LATE (at epoch N's commit only dirs superseded by epochs < N are
-    deleted — the dir N itself supersedes survives until N+1 commits,
-    because it is the pre-state an epoch-N replay must still read).
-    Crash mid-GC leaves unreferenced files readers ignore. This is
-    exactly a minimal transaction log — the same commit protocol as a
-    table format, scoped to one writer.
+    from the pre-N state, so checkpoint recovery converges. The log is
+    :mod:`~local_stream_stack_spark.streaming.txlog`, read ONCE per
+    epoch for both the pre-state and garbage collection (GC).
+
+    GC is best-effort and one epoch LATE: epoch N's commit deletes, per
+    touched bucket, at most one directory — the second-latest epoch
+    < N that wrote the bucket, which the latest such epoch superseded
+    and which became unreachable by any replay once that epoch's
+    checkpoint committed. The dir N itself supersedes survives until
+    the next epoch touching the bucket commits, because it is the
+    pre-state an epoch-N replay must still read. Every older dir was
+    already deleted by an earlier commit, so per-epoch GC is at most
+    one delete per touched bucket however old the stream is. The trade:
+    a delete that raises is not retried later, so it leaves one
+    unreferenced directory on disk, which readers ignore (they resolve
+    buckets through the manifests only). A crash mid-GC is recovered:
+    the replay of N re-issues N's deletes. This is exactly a
+    minimal transaction log — the same commit protocol as a table
+    format, scoped to one writer.
 
     Tombstones follow Kafka compaction semantics: the latest record
     per key is RETAINED with a ``__deleted`` flag (so a partition
     whose last live key is deleted still rewrites, and a later update
     resurrects the key); ``read_compacted_view`` filters them out.
     """
-    import json
-
     from local_stream_stack_spark.operators.events import latest_per_key
 
     spark = df.sparkSession
@@ -247,14 +257,15 @@ def latest_per_key_stream_parquet(
         F.lit(n_buckets),
     ).cast("int")
     data_path = target_path.rstrip("/") + "/data"
+    log_dir = target_path.rstrip("/") + "/_manifests"
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         latest = latest_per_key(
             batch_df, keys=key_list, order_by=[order_col]
         ).withColumn("__bucket", bucket)
-        touched = [
+        touched = sorted(
             r[0] for r in latest.select("__bucket").distinct().collect()
-        ]
+        )
         if not touched:
             return
         # Pre-state = committed manifests STRICTLY BEFORE this epoch:
@@ -264,14 +275,14 @@ def latest_per_key_stream_parquet(
         # the batch — falling back to merged=latest would rewrite the
         # touched buckets with only this batch's keys, permanently
         # deleting every other key in them; checkpoint retry preserves
-        # correctness instead.
-        latest_by_bucket = _manifest_latest_by_bucket(
-            spark, target_path, before_epoch=epoch_id
+        # correctness instead. This one log read also drives the GC.
+        history = _bucket_history(
+            txlog.read_commits(spark, log_dir), before_epoch=epoch_id
         )
         current_dirs = [
-            f"{data_path}/__epoch={e}/__bucket={b}"
-            for b, e in latest_by_bucket.items()
-            if b in set(touched)
+            f"{data_path}/__epoch={history[b][0]}/__bucket={b}"
+            for b in touched
+            if b in history
         ]
         if current_dirs:
             current = (
@@ -302,36 +313,24 @@ def latest_per_key_stream_parquet(
         )
         # 2) COMMIT: single-file manifest rename — before this rename
         #    readers cannot see any epoch-N file
-        _write_manifest_atomic(
-            spark,
-            target_path,
-            epoch_id,
-            json.dumps({"epoch": epoch_id, "buckets": sorted(touched)}),
+        txlog.commit(
+            spark, log_dir, epoch_id, {"epoch": epoch_id, "buckets": touched}
         )
-        # 3) best-effort GC, DEFERRED BY ONE EPOCH: delete only bucket
-        #    dirs superseded by an epoch STRICTLY BEFORE N. The dir
-        #    that epoch N itself supersedes (latest epoch < N per
-        #    bucket) is retained — it is exactly the pre-state an
-        #    epoch-N replay reads (crash after the manifest rename but
-        #    before the checkpoint commit), and deleting it here would
-        #    wedge every retry on path-not-found. It becomes eligible
-        #    at epoch N+1's commit, by which time the checkpoint has
-        #    committed N and no N-retry can occur. Re-deleting an
-        #    already-GC'd path is a driver-side no-op.
-        try:
-            committed = _read_manifests(spark, target_path)
-            for b in touched:
-                epochs_b = sorted(
-                    e
-                    for e, bl in committed.items()
-                    if e < epoch_id and b in bl
-                )
-                for e in epochs_b[:-1]:
-                    _delete_path(
-                        spark, f"{data_path}/__epoch={e}/__bucket={b}"
-                    )
-        except Exception:
-            pass  # unreferenced files are invisible to readers
+        # 3) best-effort GC, DEFERRED BY ONE EPOCH: per touched bucket
+        #    delete only the second-latest epoch < N that wrote it. The
+        #    latest one is exactly the pre-state an epoch-N replay
+        #    reads (crash after the manifest rename but before the
+        #    checkpoint commit), and deleting it here would wedge every
+        #    retry on path-not-found; it becomes eligible when the next
+        #    epoch touching the bucket commits. Older dirs were deleted
+        #    by earlier commits.
+        for b in touched:
+            if len(history.get(b, ())) > 1:
+                e = history[b][1]
+                try:
+                    txlog.delete(spark, f"{data_path}/__epoch={e}/__bucket={b}")
+                except Exception:
+                    pass  # one unreferenced dir, invisible to readers
 
     return (
         df.writeStream.outputMode("update")
@@ -341,100 +340,82 @@ def latest_per_key_stream_parquet(
     )
 
 
-def _manifest_dir(target_path: str) -> str:
-    return target_path.rstrip("/") + "/_manifests"
-
-
-def _write_manifest_atomic(
-    spark, target_path: str, epoch_id: int, payload: str
-) -> None:
-    """Commit one epoch: write a non-``.json`` temp ``.tmp-<N>`` then rename to
-    ``<N>.json`` (single-file rename = the atomic commit point). An
-    epoch retry replaces its own manifest — same merged content, so
-    either version of the file commits the same state."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    mdir = _manifest_dir(target_path)
-    fs = Path(mdir).getFileSystem(hconf)
-    fs.mkdirs(Path(mdir))
-    # No .json suffix on the temp: Hadoop globStatus does NOT hide
-    # dot-prefixed files, so a crash-leftover temp named *.json would
-    # be read back as a committed manifest by _read_manifests.
-    tmp = Path(f"{mdir}/.tmp-{epoch_id}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(payload.encode("utf-8")))
-    finally:
-        out.close()
-    final = Path(f"{mdir}/{epoch_id}.json")
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"manifest commit failed for epoch {epoch_id}")
-
-
-def _read_manifests(spark, target_path: str) -> dict[int, list[int]]:
-    """{epoch: [bucket_ids]} for every COMMITTED manifest. Tiny files,
-    read driver-side through the Hadoop FS API (no Spark job per
-    epoch)."""
-    import json
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    mdir = _manifest_dir(target_path)
-    fs = Path(mdir).getFileSystem(hconf)
-    if not fs.exists(Path(mdir)):
-        return {}
-    statuses = fs.globStatus(Path(mdir + "/*.json"))
-    out: dict[int, list[int]] = {}
-    for st in statuses or []:
-        p = st.getPath()
-        # Strict commit-name filter: ONLY <epoch>.json is a committed
-        # manifest. Hadoop globStatus does not exclude dot-prefixed
-        # names, so crash-leftover temps (or any stray file) must not
-        # be parsed as commits — that would break the atomic-rename
-        # guarantee (uncommitted epoch visible, or JSONDecodeError on
-        # a torn write poisoning every subsequent read).
-        if not re.fullmatch(r"\d+\.json", p.getName()):
-            continue
-        stream = fs.open(p)
-        try:
-            text = (
-                jvm.java.util.Scanner(stream, "UTF-8")
-                .useDelimiter("\\A")
-                .next()
-            )
-        finally:
-            stream.close()
-        m = json.loads(text)
-        out[int(m["epoch"])] = [int(b) for b in m["buckets"]]
-    return out
-
-
-def _manifest_latest_by_bucket(
-    spark, target_path: str, before_epoch: int | None = None
-) -> dict[int, int]:
-    """{bucket: latest committed epoch that wrote it}, optionally
-    restricted to epochs strictly below ``before_epoch`` (the
+def _bucket_history(
+    commits: dict[int, dict], before_epoch: int | None = None
+) -> dict[int, list[int]]:
+    """{bucket: epochs whose committed manifest lists it, newest first},
+    optionally restricted to epochs strictly below ``before_epoch`` (the
     retry-safe pre-state view)."""
-    latest: dict[int, int] = {}
-    for epoch, buckets in _read_manifests(spark, target_path).items():
-        if before_epoch is not None and epoch >= before_epoch:
-            continue
-        for b in buckets:
-            if b not in latest or epoch > latest[b]:
-                latest[b] = epoch
-    return latest
+    history: dict[int, list[int]] = {}
+    for epoch in sorted(commits, reverse=True):
+        if before_epoch is None or epoch < before_epoch:
+            for b in commits[epoch]["buckets"]:
+                history.setdefault(int(b), []).append(epoch)
+    return history
 
 
-def _delete_path(spark, path: str) -> None:
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
-    fs.delete(p, True)
+def _epoch_delta_view_stream(
+    df: DataFrame,
+    delta,
+    fold,
+    target_path: str,
+    checkpoint_location: str,
+    compact_every_n_epochs: int | None,
+):
+    """The write path the single-family epoch-delta views share: each
+    micro-batch writes ``delta(batch)`` as one file to its OWN
+    ``__epoch=<id>`` directory (a replay overwrites the same
+    directory, so the view stays exactly-once), then, once
+    ``compact_every_n_epochs`` live epochs have piled up, folds the
+    store with ``fold`` off the admit path."""
+
+    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+        (
+            delta(batch_df)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{target_path}/__epoch={epoch_id}")
+        )
+        if compact_every_n_epochs:
+            spark = batch_df.sparkSession
+            compaction.auto_compact_if_due(
+                spark,
+                target_path,
+                compact_every_n_epochs,
+                lambda: _compact_epoch_delta_view(spark, target_path, fold),
+            )
+
+    return (
+        df.writeStream.outputMode("update")
+        .foreachBatch(upsert)
+        .option("checkpointLocation", checkpoint_location)
+        .start()
+    )
+
+
+def _read_epoch_delta_view(
+    spark, target_path: str, fold, what: str
+) -> DataFrame:
+    """``fold`` over the compacted base generation (if any) plus all
+    live epoch deltas of a single-family view."""
+    deltas = compaction.read_family(spark, target_path, "")
+    if deltas is None:
+        raise FileNotFoundError(f"empty {what} view at {target_path}")
+    return fold(deltas)
+
+
+def _compact_epoch_delta_view(spark, target_path: str, fold) -> int:
+    return compaction.compact_store(
+        spark, target_path, {"": {"fold": fold}}
+    )
+
+
+def _fold_by_keys(df: DataFrame, value_cols, aggs) -> DataFrame:
+    """Group ``df`` by every column that is neither a value column nor
+    ``__epoch``: a view delta's keys are whatever columns it carries
+    besides its values."""
+    keys = [c for c in df.columns if c not in value_cols and c != "__epoch"]
+    return df.groupBy(*keys).agg(*aggs)
 
 
 def aggregate_view_stream_parquet(
@@ -469,33 +450,16 @@ def aggregate_view_stream_parquet(
     """
     key_list = list(keys)
     sums = list(sum_cols)
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(*key_list).agg(
+    return _epoch_delta_view_stream(
+        df,
+        lambda b: b.groupBy(*key_list).agg(
             F.count("*").alias("n_rows"),
             *[F.sum(c).alias(f"sum_{c}") for c in sums],
-        )
-        (
-            delta.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                target_path,
-                compact_every_n_epochs,
-                lambda: compact_aggregate_view(spark, target_path),
-            )
-
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+        ),
+        _aggregate_fold,
+        target_path,
+        checkpoint_location,
+        compact_every_n_epochs,
     )
 
 
@@ -519,34 +483,17 @@ def minmax_view_stream_parquet(
     into one base generation, and ``compact_every_n_epochs`` triggers
     the fold automatically off the admit path."""
     key_list = list(keys)
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(*key_list).agg(
+    return _epoch_delta_view_stream(
+        df,
+        lambda b: b.groupBy(*key_list).agg(
             F.min(val_col).alias("min_v"),
             F.max(val_col).alias("max_v"),
             F.count("*").alias("n_rows"),
-        )
-        (
-            delta.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                target_path,
-                compact_every_n_epochs,
-                lambda: compact_minmax_view(spark, target_path),
-            )
-
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+        ),
+        _minmax_fold,
+        target_path,
+        checkpoint_location,
+        compact_every_n_epochs,
     )
 
 
@@ -572,9 +519,9 @@ def bitmap_view_stream_parquet(
     re-merges into one base, ``compact_every_n_epochs`` auto-triggers
     the fold off the admit path."""
     flags = list(flag_cols)
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(zone_col).agg(
+    return _epoch_delta_view_stream(
+        df,
+        lambda b: b.groupBy(zone_col).agg(
             *[
                 F.expr(
                     f"bit_or(CASE WHEN {c} = 1 THEN"
@@ -585,43 +532,20 @@ def bitmap_view_stream_parquet(
                 .alias(f"m_{c}")
                 for c in flags
             ]
-        )
-        (
-            delta.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                target_path,
-                compact_every_n_epochs,
-                lambda: compact_bitmap_view(spark, target_path),
-            )
-
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+        ),
+        _bitmap_fold,
+        target_path,
+        checkpoint_location,
+        compact_every_n_epochs,
     )
 
 
 def _bitmap_fold(df: DataFrame) -> DataFrame:
-    mask_cols = [c for c in df.columns if c.startswith("m_")]
-    key_cols = [
-        c
-        for c in df.columns
-        if not c.startswith("m_") and c != "__epoch"
-    ]
-    return df.groupBy(*key_cols).agg(
-        *[
-            F.expr(f"bit_or({c})").cast("bigint").alias(c)
-            for c in mask_cols
-        ]
+    masks = [c for c in df.columns if c.startswith("m_")]
+    return _fold_by_keys(
+        df,
+        masks,
+        [F.expr(f"bit_or({c})").cast("bigint").alias(c) for c in masks],
     )
 
 
@@ -629,34 +553,25 @@ def read_bitmap_view(spark, target_path: str) -> DataFrame:
     """Current per-zone masks of a ``bitmap_view_stream_parquet``
     view: OR-fold of the compacted base generation (if any) plus all
     live epoch deltas."""
-    from local_stream_stack_spark.streaming import compaction
-
-    deltas = compaction.read_family(spark, target_path, "")
-    if deltas is None:
-        raise FileNotFoundError(f"empty bitmap view at {target_path}")
-    return _bitmap_fold(deltas)
+    return _read_epoch_delta_view(spark, target_path, _bitmap_fold, "bitmap")
 
 
 def compact_bitmap_view(spark, target_path: str) -> int:
     """Fold all epoch deltas of a bitmap view into one base
     generation (idempotent-associative OR re-merge), committed
     atomically through the generation manifest."""
-    from local_stream_stack_spark.streaming import compaction
-
-    return compaction.compact_store(
-        spark, target_path, {"": {"fold": _bitmap_fold}}
-    )
+    return _compact_epoch_delta_view(spark, target_path, _bitmap_fold)
 
 
 def _minmax_fold(df: DataFrame) -> DataFrame:
-    value_cols = {"min_v", "max_v", "n_rows"}
-    key_cols = [
-        c for c in df.columns if c not in value_cols and c != "__epoch"
-    ]
-    return df.groupBy(*key_cols).agg(
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.sum("n_rows").cast("bigint").alias("n_rows"),
+    return _fold_by_keys(
+        df,
+        ("min_v", "max_v", "n_rows"),
+        [
+            F.min("min_v").alias("min_v"),
+            F.max("max_v").alias("max_v"),
+            F.sum("n_rows").cast("bigint").alias("n_rows"),
+        ],
     )
 
 
@@ -664,23 +579,19 @@ def read_minmax_view(spark, target_path: str) -> DataFrame:
     """Current per-key (min, max, count) of a
     ``minmax_view_stream_parquet`` view: fold of the compacted base
     generation (if any) plus all live epoch deltas."""
-    from local_stream_stack_spark.streaming import compaction
-
-    deltas = compaction.read_family(spark, target_path, "")
-    if deltas is None:
-        raise FileNotFoundError(f"empty minmax view at {target_path}")
-    return _minmax_fold(deltas)
+    return _read_epoch_delta_view(spark, target_path, _minmax_fold, "minmax")
 
 
 def compact_minmax_view(spark, target_path: str) -> int:
     """Fold all epoch deltas of a minmax view into one base
     generation (associative min/max + additive count re-merge),
     committed atomically through the generation manifest."""
-    from local_stream_stack_spark.streaming import compaction
+    return _compact_epoch_delta_view(spark, target_path, _minmax_fold)
 
-    return compaction.compact_store(
-        spark, target_path, {"": {"fold": _minmax_fold}}
-    )
+
+def _aggregate_fold(df: DataFrame) -> DataFrame:
+    values = [c for c in df.columns if c.startswith("sum_") or c == "n_rows"]
+    return _fold_by_keys(df, values, [F.sum(c).alias(c) for c in values])
 
 
 def read_aggregate_view(spark, target_path: str) -> DataFrame:
@@ -688,15 +599,8 @@ def read_aggregate_view(spark, target_path: str) -> DataFrame:
     sum of the compacted base generation (if any) plus all live epoch
     deltas per key (additivity makes the fold exact whatever mix of
     generation and epochs is on disk)."""
-    from local_stream_stack_spark.streaming import compaction
-
-    deltas = compaction.read_family(spark, target_path, "")
-    if deltas is None:
-        raise FileNotFoundError(f"empty aggregate view at {target_path}")
-    value_cols = [c for c in deltas.columns if c.startswith("sum_") or c == "n_rows"]
-    key_cols = [c for c in deltas.columns if c not in value_cols and c != "__epoch"]
-    return deltas.groupBy(*key_cols).agg(
-        *[F.sum(c).alias(c) for c in value_cols]
+    return _read_epoch_delta_view(
+        spark, target_path, _aggregate_fold, "aggregate"
     )
 
 
@@ -708,27 +612,15 @@ def compact_aggregate_view(spark, target_path: str) -> int:
     filesystem with os.listdir/shutil and silently could not compact
     an HDFS/S3 store). Run periodically so read-side fan-in stays
     bounded; the fold is safe because the totals are themselves an
-    additive delta. Returns the new generation id."""
-    from local_stream_stack_spark.streaming import compaction
-
-    probe = compaction.read_family(spark, target_path, "")
-    if probe is None:
+    additive delta. Returns the new generation id; raises
+    ``FileNotFoundError`` while the view holds neither a generation nor
+    a committed epoch (driver-side listings, no Spark job)."""
+    gen, manifest = compaction.latest_generation(spark, target_path)
+    if (gen is None or "" not in manifest["families"]) and not (
+        txlog.partition_ids(spark, target_path, committed=True)
+    ):
         raise FileNotFoundError(f"empty aggregate view at {target_path}")
-    value_cols = [
-        c for c in probe.columns if c.startswith("sum_") or c == "n_rows"
-    ]
-    key_cols = [
-        c for c in probe.columns if c not in value_cols and c != "__epoch"
-    ]
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(
-            *[F.sum(c).alias(c) for c in value_cols]
-        )
-
-    return compaction.compact_store(
-        spark, target_path, {"": {"fold": fold}}
-    )
+    return _compact_epoch_delta_view(spark, target_path, _aggregate_fold)
 
 
 def read_compacted_view(spark, target_path: str) -> DataFrame:
@@ -740,14 +632,16 @@ def read_compacted_view(spark, target_path: str) -> DataFrame:
     files (a crash mid-write) are invisible, which is the read half
     of the atomic-commit protocol."""
     data_path = target_path.rstrip("/") + "/data"
-    latest_by_bucket = _manifest_latest_by_bucket(spark, target_path)
-    if not latest_by_bucket:
+    history = _bucket_history(
+        txlog.read_commits(spark, target_path.rstrip("/") + "/_manifests")
+    )
+    if not history:
         raise FileNotFoundError(
             f"no committed manifests under {target_path}"
         )
     dirs = [
-        f"{data_path}/__epoch={e}/__bucket={b}"
-        for b, e in sorted(latest_by_bucket.items())
+        f"{data_path}/__epoch={h[0]}/__bucket={b}"
+        for b, h in sorted(history.items())
     ]
     return (
         spark.read.option("basePath", data_path)
@@ -960,8 +854,6 @@ def ingest_dedup_stream_parquet(
         # compacted rows __epoch = -1 (always earlier; a replayed folded
         # epoch then collides with its own rows in the generation and
         # re-admits nothing, keeping the store exactly-once).
-        from local_stream_stack_spark.streaming import compaction
-
         store_df = compaction.read_family(
             spark, store_path, "", with_epoch=True
         )
@@ -994,8 +886,6 @@ def ingest_dedup_stream_parquet(
             .parquet(f"{store_path}/__epoch={epoch_id}")
         )
         if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
             compaction.auto_compact_if_due(
                 spark,
                 store_path,
@@ -1016,45 +906,12 @@ def ingest_dedup_stream_parquet(
     )
 
 
-def _store_has_epochs(spark, base_path: str) -> bool:
-    """True iff the store has at least one ``__epoch=*`` directory.
-
-    Explicit existence probe (Hadoop FileSystem API, so any supported
-    scheme works) instead of try/except around the read: only a MISSING
-    store means "first epoch". A transient or corruption error on the
-    store read must propagate and fail the batch — swallowing it would
-    silently admit the whole batch as novel and write permanent
-    duplicates with no signal; the checkpoint retry preserves
-    correctness instead."""
-    return _path_has_partitions(spark, base_path, "__epoch=*")
-
-
-def _path_has_partitions(spark, base_path: str, glob: str) -> bool:
-    """True iff ``base_path`` exists and contains at least one child
-    matching ``glob`` (e.g. ``__epoch=*``, ``__bucket=*``). Hadoop
-    FileSystem API so any supported scheme works; used as the
-    first-epoch probe for streaming view stores so that only a MISSING
-    store short-circuits — any other read error propagates."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(base_path)
-    fs = path.getFileSystem(hconf)
-    if not fs.exists(path):
-        return False
-    statuses = fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(base_path.rstrip("/") + "/" + glob)
-    )
-    return statuses is not None and len(statuses) > 0
-
-
 def read_ingest_store(spark, store_path: str) -> DataFrame:
     """All admitted rows of an ``ingest_dedup_stream_parquet`` store:
     the latest committed compaction generation (if any) plus the live
     epoch deltas beyond its fold point — resolved through the
     generation manifest so a compacted and an uncompacted store read
     identically (``streaming/compaction.py``)."""
-    from local_stream_stack_spark.streaming import compaction
-
     df = compaction.read_family(spark, store_path, "")
     if df is None:
         raise FileNotFoundError(f"empty ingest store at {store_path}")
@@ -1138,8 +995,6 @@ def ingest_neardup_stream_parquet(
         # every document would collide with itself, turning the epoch
         # overwrite into a permanent delete. Store-read errors propagate
         # (only a missing store means "first epoch").
-        from local_stream_stack_spark.streaming import compaction
-
         keys_df = compaction.read_family(
             spark, store_path, "keys", with_epoch=True
         )
@@ -1223,8 +1078,6 @@ def ingest_neardup_stream_parquet(
 def read_neardup_store(spark, store_path: str) -> DataFrame:
     """Admitted rows of an ``ingest_neardup_stream_parquet`` store
     (generation + live epoch deltas, manifest-resolved)."""
-    from local_stream_stack_spark.streaming import compaction
-
     df = compaction.read_family(spark, store_path, "rows")
     if df is None:
         raise FileNotFoundError(f"empty near-dup store at {store_path}")
@@ -1340,7 +1193,7 @@ def ingest_neardup_stream_tws(
     def admit_fallback(kbatch: DataFrame, epoch_id: int) -> None:
         spark = kbatch.sparkSession
         kbatch = kbatch.localCheckpoint(eager=True)
-        if _store_has_epochs(spark, f"{store_path}/keys"):
+        if txlog.partition_ids(spark, f"{store_path}/keys"):
             known = (
                 spark.read.option("basePath", f"{store_path}/keys")
                 .parquet(f"{store_path}/keys/__epoch=*")
@@ -1584,14 +1437,11 @@ def scd2_dimension_stream_parquet(
                 )).cast("int"),
             )
         )
-        if _path_has_partitions(spark, f"{target_path}/open", "__epoch=*"):
-            prev_epochs = [
-                int(p.split("=", 1)[1])
-                for p in _list_partitions(spark, f"{target_path}/open")
-                if int(p.split("=", 1)[1]) < epoch_id
-            ]
-        else:
-            prev_epochs = []
+        prev_epochs = [
+            e
+            for e in txlog.partition_ids(spark, f"{target_path}/open")
+            if e < epoch_id
+        ]
         if prev_epochs:
             tails = (
                 spark.read.option("basePath", f"{target_path}/open")
@@ -1679,26 +1529,13 @@ def scd2_dimension_stream_parquet(
     )
 
 
-def _list_partitions(spark, base_path: str) -> list[str]:
-    """Names of ``__epoch=*`` children under a view family dir."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(base_path)
-    fs = path.getFileSystem(hconf)
-    statuses = fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(base_path.rstrip("/") + "/__epoch=*")
-    )
-    return [s.getPath().getName() for s in statuses] if statuses else []
-
-
 def read_scd2_dimension(spark, target_path: str) -> DataFrame:
     """Current SCD-2 history of a ``scd2_dimension_stream_parquet``
     view: all closed runs plus the latest epoch's open tails."""
     closed = spark.read.option(
         "basePath", f"{target_path}/closed"
     ).parquet(f"{target_path}/closed/__epoch=*").drop("__epoch")
-    parts = _list_partitions(spark, f"{target_path}/open")
-    latest = max(int(p.split("=", 1)[1]) for p in parts)
+    latest = max(txlog.partition_ids(spark, f"{target_path}/open"))
     open_tails = (
         spark.read.option("basePath", f"{target_path}/open")
         .parquet(f"{target_path}/open/__epoch={latest}")
@@ -1732,35 +1569,19 @@ def kmv_view_stream_parquet(
         portable_hash32,
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.select(
-                portable_hash32(F.col(key_col)).alias("h")
-            )
-            .distinct()
-            .orderBy("h")
-            .limit(k)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/__epoch={epoch_id}")
-        )
-        if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
-            spark = batch_df.sparkSession
-            compaction.auto_compact_if_due(
-                spark,
-                target_path,
-                compact_every_n_epochs,
-                lambda: compact_kmv_view(spark, target_path, k=k),
-            )
-
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+    fold = _kmv_fold(k)
+    return _epoch_delta_view_stream(
+        df,
+        lambda b: fold(b.select(portable_hash32(F.col(key_col)).alias("h"))),
+        fold,
+        target_path,
+        checkpoint_location,
+        compact_every_n_epochs,
     )
+
+
+def _kmv_fold(k: int):
+    return lambda df: df.select("h").distinct().orderBy("h").limit(k)
 
 
 def read_kmv_view(spark, target_path: str, k: int = 64) -> DataFrame:
@@ -1771,14 +1592,8 @@ def read_kmv_view(spark, target_path: str, k: int = 64) -> DataFrame:
     from local_stream_stack_spark.operators.sketches import (
         kmv_estimate_cols,
     )
-    from local_stream_stack_spark.streaming import compaction
 
-    deltas = compaction.read_family(spark, target_path, "")
-    if deltas is None:
-        raise FileNotFoundError(f"empty KMV view at {target_path}")
-    merged = (
-        deltas.select("h").distinct().orderBy("h").limit(k)
-    )
+    merged = _read_epoch_delta_view(spark, target_path, _kmv_fold(k), "KMV")
     return merged.agg(*kmv_estimate_cols(k))
 
 
@@ -1788,20 +1603,7 @@ def compact_kmv_view(spark, target_path: str, k: int = 64) -> int:
     KMV merge keeps only the global k minima, and a hash outside them
     can never re-enter any future merge, so the folded store reads
     identically to the unfolded one at every later epoch."""
-    from local_stream_stack_spark.streaming import compaction
-
-    return compaction.compact_store(
-        spark,
-        target_path,
-        {
-            "": {
-                "fold": lambda df: df.select("h")
-                .distinct()
-                .orderBy("h")
-                .limit(k)
-            }
-        },
-    )
+    return _compact_epoch_delta_view(spark, target_path, _kmv_fold(k))
 
 
 def maintain_join_view_stream_parquet(
@@ -1857,8 +1659,6 @@ def maintain_join_view_stream_parquet(
         d_right = batch_df.filter(
             F.col(side_col) == F.lit(right_tag)
         ).select(*rcols)
-        from local_stream_stack_spark.streaming import compaction
-
         # one manifest resolution for both side families (ADVICE r11)
         snap = compaction.latest_generation(spark, store_path)
 
@@ -1916,8 +1716,6 @@ def maintain_join_view_stream_parquet(
 def read_join_view(spark, store_path: str) -> DataFrame:
     """Current contents of a ``maintain_join_view_stream_parquet``
     view (generation + live epoch deltas, manifest-resolved)."""
-    from local_stream_stack_spark.streaming import compaction
-
     df = compaction.read_family(spark, store_path, "view")
     if df is None:
         raise FileNotFoundError(f"empty join view at {store_path}")
@@ -1930,8 +1728,6 @@ def compact_join_view(
     """Fold a join-view store's epoch dirs into one generation: all
     three families are append-only unions; the sides bucket on the
     join key so future delta probes co-locate."""
-    from local_stream_stack_spark.streaming import compaction
-
     return compaction.compact_store(
         spark,
         store_path,
@@ -2014,8 +1810,6 @@ def maintain_bm25_index_stream_parquet(
             f"{store_path}/corpus/__epoch={epoch_id}"
         )
         if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
             spark = batch_df.sparkSession
             compaction.auto_compact_if_due(
                 spark,
@@ -2066,8 +1860,6 @@ def read_bm25_index_topk(
     families (ADVICE r11), and compaction's one-cycle deferred vacuum
     keeps the snapshot's directories alive for the read."""
     import zlib
-
-    from local_stream_stack_spark.streaming import compaction
 
     snap = compaction.latest_generation(spark, store_path)
 
@@ -2212,7 +2004,7 @@ def skyline_stream_parquet(
             )
         )
         merged = batch_min
-        if _store_has_epochs(spark, store_path):
+        if txlog.partition_ids(spark, store_path):
             prior_all = spark.read.option("basePath", store_path).parquet(
                 f"{store_path}/__epoch=*"
             ).filter(F.col("__epoch") < F.lit(int(epoch_id)))
@@ -2323,8 +2115,6 @@ def maintain_ivf_index_stream_parquet(
             .parquet(f"{store_path}/csum/__epoch={epoch_id}")
         )
         if compact_every_n_epochs:
-            from local_stream_stack_spark.streaming import compaction
-
             spark = batch_df.sparkSession
             compaction.auto_compact_if_due(
                 spark,
@@ -2350,8 +2140,6 @@ def compact_ivf_index(
     """Fold a maintained IVF index into one generation: inverted
     lists bucket by cell (probe-time partition pruning), centroid
     sums re-merge by exact integer group-sum."""
-    from local_stream_stack_spark.streaming import compaction
-
     return compaction.compact_store(
         spark,
         store_path,
@@ -2381,8 +2169,6 @@ def read_ivf_index_topk(
     recipe as the batch `sim_ivf_topk`, so the maintained result is
     bit-equal to batch over the union of all epochs."""
     from pyspark.sql.window import Window
-
-    from local_stream_stack_spark.streaming import compaction
 
     def doti(a, b):
         return F.aggregate(

@@ -476,7 +476,7 @@ def test_vacuum_only_deletes_the_epochs_this_run_listed(spark, tmp_path):
     listing (a racing micro-batch) must never enter the deferred-vacuum
     set — it survives the fold AND the next fold's vacuum as live data.
     Simulated by monkeypatching the lister to hide the late epoch."""
-    from local_stream_stack_spark.streaming import compaction
+    from local_stream_stack_spark.streaming import compaction, txlog
 
     store = str(tmp_path / "race")
     spark.createDataFrame(
@@ -486,18 +486,18 @@ def test_vacuum_only_deletes_the_epochs_this_run_listed(spark, tmp_path):
         [("a", 7)], "k string, n_rows long"
     ).coalesce(1).write.parquet(f"{store}/__epoch=1")
 
-    real = compaction._glob_epoch_ids
+    real = txlog.partition_ids
 
-    def hide_late(spark_, fpath):
-        return [e for e in real(spark_, fpath) if e != 1]
+    def hide_late(spark_, fpath, *args, **kwargs):
+        return [e for e in real(spark_, fpath, *args, **kwargs) if e != 1]
 
     fold_spec = {"": {"fold": lambda df: df.groupBy("k").agg(
         F.sum("n_rows").alias("n_rows"))}}
-    compaction._glob_epoch_ids = hide_late
+    txlog.partition_ids = hide_late
     try:
         compaction.compact_store(spark, store, fold_spec)
     finally:
-        compaction._glob_epoch_ids = real
+        txlog.partition_ids = real
     import os
 
     # epoch 1 landed "after the listing": not folded, not in the

@@ -204,6 +204,84 @@ def test_latest_per_key_stream_parquet_incremental_merge(spark, tmpdir):
     assert got == {(2, 7.0), (3, 9.0)}
 
 
+def test_latest_per_key_gc_deletes_one_dir_per_touched_bucket(
+    spark, tmpdir, monkeypatch
+):
+    """Garbage collection (GC) of the parquet latest-per-key view costs
+    at most one delete per touched bucket per epoch, however old the
+    stream is: epoch N deletes only the second-latest epoch < N that
+    wrote each bucket it touches. The dir epoch N supersedes (the
+    latest epoch < N per bucket) is the pre-state a replay of N reads,
+    so it stays on disk until the next epoch touching the bucket
+    commits; every older dir is gone."""
+    import os
+
+    from local_stream_stack_spark.streaming import txlog
+    from local_stream_stack_spark.streaming.ops import (
+        latest_per_key_stream_parquet,
+        read_compacted_view,
+    )
+
+    deletes = []
+    real_delete = txlog.delete
+
+    def counting_delete(spark_, path):
+        deletes.append(path)
+        real_delete(spark_, path)
+
+    monkeypatch.setattr(txlog, "delete", counting_delete)
+    in_dir, view = f"{tmpdir}/in", f"{tmpdir}/view"
+
+    def feed(epoch):
+        # odd epochs touch a subset of the keys, so bucket histories
+        # overlap unevenly across epochs
+        users = range(12) if epoch % 2 == 0 else range(3)
+        rows = [
+            (100 * epoch + u, _ts(10 + epoch), u, "update", float(epoch))
+            for u in users
+        ]
+        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+
+    feed(0)
+    q = latest_per_key_stream_parquet(
+        spark.readStream.schema(EVENT_SCHEMA).parquet(in_dir),
+        keys=["user_id"],
+        order_col="ts",
+        target_path=view,
+        checkpoint_location=f"{tmpdir}/cp",
+        n_buckets=4,
+    )
+    try:
+        for epoch in range(6):
+            if epoch:
+                feed(epoch)
+            seen = len(deletes)
+            q.processAllAvailable()
+            commits = txlog.read_commits(spark, f"{view}/_manifests")
+            assert max(commits) == epoch == len(commits) - 1
+            touched = commits[epoch]["buckets"]
+            assert len(deletes) - seen <= len(touched)
+            for b in touched:
+                prior = [
+                    e for e in sorted(commits)
+                    if e < epoch and b in commits[e]["buckets"]
+                ]
+                dirs = [
+                    f"{view}/data/__epoch={e}/__bucket={b}" for e in prior
+                ]
+                assert all(not os.path.isdir(d) for d in dirs[:-1]), dirs
+                if dirs:
+                    assert os.path.isdir(dirs[-1]), "replay pre-state GC'd"
+    finally:
+        q.stop()
+    assert deletes, "GC never ran"
+    want = {u: 4.0 for u in range(12)} | {u: 5.0 for u in range(3)}
+    got = {r.user_id: r.value for r in read_compacted_view(spark, view).collect()}
+    assert got == want
+
+
 @pytest.mark.soak
 def test_stream_stream_interval_join(spark, tmpdir):
     """Views joined to purchases by the same user within 30 min."""
