@@ -824,9 +824,9 @@ def _neardup_tws_oracle_sql() -> str:
     """Replay the two-epoch TWS (indexed-state-store) near-dup
     ingestion in SQL. Identical to ``_neardup_stream_oracle_sql``
     except the cross-epoch store holds band keys of every SEEN epoch-0
-    doc — the seen-claims semantic the per-bucket state accumulates
-    (a bucket's ValueState cannot depend on the doc-grain admit
-    decision computed downstream of it)."""
+    doc — the seen-claims semantic the band-key dedup state
+    accumulates (the per-key state cannot depend on the doc-grain
+    admit decision computed downstream of it)."""
     from local_stream_stack_spark.queries.llm import (
         _minhash_bandkey_cte_sql,
     )
@@ -876,31 +876,26 @@ def stream_ingest_neardup_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (VERDICT r9 task #5 — the last designed-not-built scale
     component): the corpus plus a full duplicate of itself streams
     through ``ingest_neardup_stream_tws``, where every LSH band key is
-    a RocksDB transformWithState KEY, so the per-epoch admitted-key
-    lookup is O(batch keys) point probes instead of the parquet twin's
-    O(store) scan. Exact duplicates collide in all bands and are
-    rejected; LSH-similar originals dedup in-batch (first id wins).
+    a key of Spark's streaming dedup state, so the per-epoch
+    admitted-key lookup is O(batch keys) state probes instead of the
+    parquet twin's O(store) scan. Exact duplicates collide in all
+    bands and are rejected; LSH-similar originals dedup in-batch
+    (first id wins).
 
     The oracle replays the seen-claims store semantics bit-for-bit
-    (``_neardup_tws_oracle_sql``); the TWS protobuf runtime ships to
-    the driver session's workers via addPyFile exactly as
-    ``stream_running_totals_tws`` proved, with the RocksDB provider
-    set and restored around the run. Where no TWS runtime exists, the
-    operator's parquet fallback computes the SAME semantics, so the
-    registered result is engine-equal either way."""
+    (``_neardup_tws_oracle_sql``). The operator is JVM-only, so it
+    runs on the SparkSession's own state-store provider with no Python
+    runner and no conf set around the run."""
     from local_stream_stack_spark.catalog import load_table
     from local_stream_stack_spark.streaming.ops import (
         ingest_neardup_stream_tws,
         read_neardup_tws_store,
-        transform_with_state_supported,
     )
 
     configure_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = ephemeral_dir(prefix="stream-e2e-neardup-tws-")
     in_dir = os.path.join(base, "in")
-    store = os.path.join(base, "store")
-    cp = os.path.join(base, "cp")
     _stage_ordered(
         in_dir,
         lambda: docs.coalesce(1).write.parquet(in_dir),
@@ -908,45 +903,21 @@ def stream_ingest_neardup_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
         ).coalesce(1).write.mode("append").parquet(in_dir),
     )
-    use_tws = transform_with_state_supported()
-    prev = None
-    if use_tws:
-        try:
-            prev = spark.conf.get(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-        except Exception:
-            prev = None
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
+    store = os.path.join(base, "store")
+    q = ingest_neardup_stream_tws(
+        spark.readStream.schema("doc_id bigint, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(in_dir),
+        id_col="doc_id",
+        text_col="text",
+        order_col="doc_id",
+        store_path=store,
+        checkpoint_location=os.path.join(base, "cp"),
+    )
     try:
-        q = ingest_neardup_stream_tws(
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir),
-            id_col="doc_id",
-            text_col="text",
-            order_col="doc_id",
-            store_path=store,
-            checkpoint_location=cp,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        q.processAllAvailable()
     finally:
-        if use_tws:
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
+        q.stop()
     return (
         read_neardup_tws_store(spark, store)
         .select("doc_id")

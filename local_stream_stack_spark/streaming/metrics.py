@@ -3,8 +3,10 @@ per-batch progress (the metrics surface the reference exposes only as
 log lines, `streaming_pipeline.py` logger calls).
 
 `MetricsListener` records one row per micro-batch progress event —
-(query name, batch id, input rows, processed rows/sec, batch duration)
-— into a bounded in-memory deque; `snapshot()` returns them as plain
+(query name, batch id, input rows, processed rows/sec, batch duration,
+the ``addBatch`` phase, and the state operators' commit time and row
+count summed over ``stateOperators[]``, 0 for a stateless query) —
+into a bounded in-memory deque; `snapshot()` returns them as plain
 dicts, and `to_df()` as a DataFrame for SQL over the engine's own
 telemetry. At scale the same listener shape forwards to a metrics
 sink (StatsD/Prometheus push) instead of memory — the listener API is
@@ -32,6 +34,7 @@ class MetricsListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
+        ops = p.stateOperators or []
         row = {
             "query_name": p.name or "",
             "query_id": str(p.id),
@@ -39,6 +42,9 @@ class MetricsListener(StreamingQueryListener):
             "num_input_rows": p.numInputRows,
             "rows_per_sec": float(p.processedRowsPerSecond or 0.0),
             "batch_duration_ms": int(p.batchDuration),
+            "add_batch_ms": int(p.durationMs.get("addBatch", 0)),
+            "state_commit_ms": sum(o.commitTimeMs for o in ops),
+            "state_rows_total": sum(o.numRowsTotal for o in ops),
         }
         with self._lock:
             self._events.append(row)
@@ -58,6 +64,7 @@ class MetricsListener(StreamingQueryListener):
         schema = (
             "query_name string, query_id string, batch_id bigint, "
             "num_input_rows bigint, rows_per_sec double, "
-            "batch_duration_ms bigint"
+            "batch_duration_ms bigint, add_batch_ms bigint, "
+            "state_commit_ms bigint, state_rows_total bigint"
         )
         return spark.createDataFrame(rows, schema=schema)

@@ -1098,55 +1098,51 @@ def ingest_neardup_stream_tws(
     shingle: str = "word",
 ):
     """Streaming near-dup ingestion through an INDEXED state store —
-    the transformWithState realization of the design note on
+    the state-store realization of the design note on
     ``ingest_neardup_stream_parquet``: instead of scanning the
     admitted-key parquet store every epoch (O(store) per epoch, even
-    with the broadcast-probe flip), claimed LSH band keys live in
-    RocksDB state sharded by key hash, so an epoch reads only the
-    shards its keys touch and no parquet store gets rescanned.
+    with the broadcast-probe flip), claimed LSH band keys live in the
+    streaming query's own versioned state store, so an epoch probes
+    only the keys it carries and no parquet store gets rescanned.
 
     Shape: stateless per-row band keys (portable md5 minhash,
-    ``minhash_band_keys_rowwise``) -> groupBy(hash shard of band, bh)
-    -> transformWithStateInPandas, where each shard's ListState holds
-    the band keys "seen in an earlier epoch". The processor emits a
-    (doc, hit) verdict per key: hit when the bucket was claimed by an
-    earlier epoch OR a lower-``order_col`` doc shares it in this
-    batch. A foreachBatch sink folds verdicts per doc (admitted = no
-    hit on any band) and writes admitted ids to ``rows/__epoch=N``
-    (idempotent overwrite; TWS state versions roll back with the
-    checkpoint on crash-replay, so replayed epochs see the same state).
+    ``minhash_band_keys_rowwise``) -> Spark's streaming
+    ``dropDuplicates(band, bh)``, whose state after epoch N-1 holds
+    every band key seen in epochs < N. A key of batch N that the
+    dedup does NOT emit was therefore claimed earlier; a key it does
+    emit is new, and the lowest-``order_col`` doc carrying it in the
+    batch claims it. ``neardup_claims_stream_tws`` folds those per-key
+    verdicts per doc (admitted = no hit on any band) and writes the
+    admitted ids to ``rows/__epoch=N`` (idempotent overwrite; the
+    state store versions roll back with the checkpoint on
+    crash-replay, so a replayed epoch sees the same claims).
 
     SEMANTIC NOTE vs the parquet-store twin: buckets here are claimed
-    by every SEEN doc (admitted or rejected) — the per-bucket state
-    update cannot depend on the doc-grain admit decision computed
-    downstream. The parquet twin claims buckets only for ADMITTED
-    docs. Seen-claims is strictly more conservative (a rejected
-    near-dup's remaining bands still poison future matches — higher
-    recall, same determinism) and is what the registered oracle
-    replays (``_neardup_tws_oracle_sql``).
+    by every SEEN doc (admitted or rejected) — the per-key dedup state
+    cannot depend on the doc-grain admit decision computed downstream.
+    The parquet twin claims buckets only for ADMITTED docs.
+    Seen-claims is strictly more conservative (a rejected near-dup's
+    remaining bands still poison future matches — higher recall, same
+    determinism) and is what the registered oracle replays
+    (``_neardup_tws_oracle_sql``).
 
-    Where the TWS runtime is unavailable (no protobuf anywhere), a
-    foreachBatch parquet fallback with IDENTICAL seen-claims semantics
-    runs instead — result-equal, which is what the oracle checks.
+    State layout: one state row per distinct (band, bh), hash-
+    partitioned on the key into ``spark.sql.shuffle.partitions``
+    state partitions. Spark records that count in the checkpoint's
+    offset log and reuses it on restart, so the layout does not follow
+    the live cluster size. The operator runs in the JVM on whichever
+    state-store provider the SparkSession sets (RocksDB spills
+    off-heap; the default keeps state on the heap). Per-epoch cost is
+    one keyed probe + insert per batch key plus one window over the
+    batch's keys: it tracks batch size, not corpus size. SCALE.md
+    compares the two store shapes at the multi-decade key counts.
 
-    100 TB: state is one tiny row per distinct band key, partitioned
-    by key hash across executors; RocksDB spills off-heap and
-    changelog-checkpoints incrementally. Per-epoch cost tracks batch
-    size, not corpus size — SCALE.md compares the two store shapes at
-    the multi-decade key counts.
-
-    RETENTION IS UNBOUNDED. On the TWS path the claims live in one
-    RocksDB ListState per hash shard of the band key (see
-    ``neardup_claims_stream_tws``), and a claim is never dropped: there
-    is no state TTL and no watermark-driven eviction, so state grows
-    with every distinct band key the stream has ever seen, for the
-    life of the checkpoint. Each micro-batch, ``handleInputRows``
-    reads a touched shard's WHOLE claim list into a Python set, so
-    per-epoch state-read time and worker memory grow as claims / shards
-    too. Callers that need a bound must start a new
-    ``checkpoint_location`` + ``store_path`` (forgetting every earlier
-    claim) or compact the corpus upstream; the fallback path keeps the
-    same unbounded key set as ``store_path/keys`` parquet epochs.
+    RETENTION IS UNBOUNDED. A claim is never dropped: there is no
+    watermark on the dedup, so state grows with every distinct band
+    key the stream has ever seen, for the life of the checkpoint.
+    Callers that need a bound must start a new ``checkpoint_location``
+    + ``store_path`` (forgetting every earlier claim) or compact the
+    corpus upstream.
     """
     from local_stream_stack_spark.operators.dedup import (
         minhash_band_keys_rowwise,
@@ -1164,80 +1160,12 @@ def ingest_neardup_stream_tws(
         rows_per_band=rows_per_band,
         carry_cols=carry,
     )
-
-    if transform_with_state_supported():
-        return neardup_claims_stream_tws(
-            keys,
-            id_col=id_col,
-            order_col=order_col,
-            store_path=store_path,
-            checkpoint_location=checkpoint_location,
-        )
-
-    def write_admitted(verdicts: DataFrame, epoch_id: int) -> None:
-        adm = (
-            verdicts.groupBy(id_col)
-            .agg(F.max(F.col("hit").cast("int")).alias("__h"))
-            .filter(F.col("__h") == 0)
-            .select(id_col)
-        )
-        adm.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/rows/__epoch={epoch_id}"
-        )
-
-    # Fallback (no TWS runtime anywhere): same seen-claims semantics on
-    # the parquet key store — epoch N looks up strictly-earlier seen
-    # keys via the broadcast-probe shape and then records ALL of its
-    # own keys (not just admitted docs'), exactly what the TWS state
-    # accumulates.
-    def admit_fallback(kbatch: DataFrame, epoch_id: int) -> None:
-        spark = kbatch.sparkSession
-        kbatch = kbatch.localCheckpoint(eager=True)
-        if txlog.partition_ids(spark, f"{store_path}/keys"):
-            known = (
-                spark.read.option("basePath", f"{store_path}/keys")
-                .parquet(f"{store_path}/keys/__epoch=*")
-                .filter(F.col("__epoch") < F.lit(int(epoch_id)))
-                .select("band", "bh")
-            )
-            hit_store = (
-                known.join(
-                    F.broadcast(kbatch.select("band", "bh", id_col)),
-                    ["band", "bh"],
-                )
-                .select(id_col)
-                .distinct()
-                .withColumn("__hit_store", F.lit(True))
-            )
-        else:
-            hit_store = None
-        mn = kbatch.groupBy("band", "bh").agg(
-            F.min(order_col).alias("__mn")
-        )
-        verdicts = kbatch.join(mn, ["band", "bh"]).select(
-            F.col(id_col), (F.col(order_col) > F.col("__mn")).alias("hit")
-        )
-        if hit_store is not None:
-            verdicts = verdicts.join(
-                F.broadcast(hit_store), id_col, "left"
-            ).select(
-                id_col,
-                (F.col("hit") | F.coalesce("__hit_store", F.lit(False))).alias(
-                    "hit"
-                ),
-            )
-        write_admitted(verdicts, epoch_id)
-        kbatch.select(id_col, "band", "bh").coalesce(
-            1
-        ).sortWithinPartitions("band", "bh").write.mode("overwrite").parquet(
-            f"{store_path}/keys/__epoch={epoch_id}"
-        )
-
-    return (
-        keys.writeStream.outputMode("append")
-        .foreachBatch(admit_fallback)
-        .option("checkpointLocation", checkpoint_location)
-        .start()
+    return neardup_claims_stream_tws(
+        keys,
+        id_col=id_col,
+        order_col=order_col,
+        store_path=store_path,
+        checkpoint_location=checkpoint_location,
     )
 
 
@@ -1249,112 +1177,59 @@ def neardup_claims_stream_tws(
     checkpoint_location: str,
 ):
     """The indexed-store core of ``ingest_neardup_stream_tws``,
-    operating on an already-keyed stream (id, [order], band, bh):
-    per-bucket transformWithState claims + the per-doc admit fold.
-    Split out so the store-growth probe (tools/scaling_curve.py
-    stream_store_tws) can seed and measure the STATE-LOOKUP term with
-    synthetic key streams, without paying the signature compute that
-    is batch-constant anyway. Requires the RocksDB state-store
-    provider and a working TWS runtime (callers gate on
-    ``transform_with_state_supported``)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
+    operating on an already-keyed stream (id, [order], band, bh): the
+    streaming dedup of band keys + the per-doc admit fold. Split out
+    so the store-growth probe (tools/scaling_curve.py stream_store_tws)
+    can seed and measure the STATE-LOOKUP term with synthetic key
+    streams, without paying the signature compute that is
+    batch-constant anyway."""
+    from pyspark.sql.window import Window
+
+    # the raw key rows, plus one __fresh row per band key that the
+    # dedup state has not seen in an earlier epoch
+    raw = keys.select(*dict.fromkeys([id_col, order_col, "band", "bh"]))
+    fresh = keys.select("band", "bh").dropDuplicates()
+    tagged = raw.unionByName(
+        fresh.withColumn("__fresh", F.lit(True)), allowMissingColumns=True
     )
 
-    from local_stream_stack_spark.utils.protobuf_compat import (
-        ship_protobuf_bundle,
-    )
-
-    ship_protobuf_bundle(keys.sparkSession)
-
-    def write_admitted(verdicts: DataFrame, epoch_id: int) -> None:
-        adm = (
-            verdicts.groupBy(id_col)
-            .agg(F.max(F.col("hit").cast("int")).alias("__h"))
-            .filter(F.col("__h") == 0)
+    def admit(batch_df: DataFrame, epoch_id: int) -> None:
+        # a raw row hits when a lower-order doc shares its band key in
+        # this batch, or when the key has no __fresh row (claimed in an
+        # earlier epoch); admitted = no hit on any band. The write is
+        # the batch's ONE action: a second would re-run the stateful
+        # dedup for the same state version.
+        w = Window.partitionBy("band", "bh")
+        hit = (F.col(order_col) > F.min(order_col).over(w)) | F.max(
+            "__fresh"
+        ).over(w).isNull()
+        (
+            batch_df.select(id_col, "__fresh", hit.alias("__hit"))
+            .filter(F.col("__fresh").isNull())
+            .groupBy(id_col)
+            .agg(F.max("__hit").alias("__hit"))
+            .filter(~F.col("__hit"))
             .select(id_col)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{store_path}/rows/__epoch={epoch_id}")
         )
-        adm.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/rows/__epoch={epoch_id}"
-        )
 
-    # State layout (r14): grouping directly on (band, bh) dispatched
-    # one Python handleInputRows call (plus an Arrow group boundary
-    # and 1-2 state-server round trips) PER DISTINCT BAND KEY —
-    # ~|docs| x bands nearly-singleton groups per epoch, so the
-    # per-group constant (~300-400 us of framework + RPC) WAS the
-    # operator: ~25-30 s/epoch at 40k keys while the keys pipeline
-    # itself costs ~2 s. The state is therefore SHARDED: the stream is
-    # grouped by a deterministic hash shard of the band key, and each
-    # shard keeps its claimed band keys in ONE RocksDB ListState
-    # entry-set accessed in bulk (one Arrow-batched read iterator + one
-    # appendList write per shard per epoch, both O(entries/shards)),
-    # with the per-bucket min/seen logic vectorized in pandas inside
-    # the shard. Admit semantics are bit-identical (seen-claims per
-    # bucket, first order_col wins in-batch): sharding only changes
-    # WHERE a bucket's claim is stored, never what it claims.
-    #
-    # Scale note: the per-epoch state read is O(claimed/shards) per
-    # shard — shards scale with the cluster (defaultParallelism), and
-    # the r13 point-probe layout (one state key per bucket) measured
-    # 10x slower end to end because per-key dispatch dominates any
-    # probe saving at every corpus size where epochs are file-sized.
-    n_shards = max(
-        8, keys.sparkSession.sparkContext.defaultParallelism
-    )
-    sharded = keys.withColumn(
-        "__shard",
-        F.pmod(F.xxhash64(F.col("band"), F.col("bh")), F.lit(n_shards)).cast(
-            "int"
-        ),
-    )
-
-    class ShardClaims(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.claimed = handle.getListState("claimed", "k string")
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            chunks = list(rows)
-            pdf = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
-            # composite bucket key: band is a small int, bh never
-            # contains '#', so the concatenation is collision-free
-            k = pdf["band"].astype(str) + "#" + pdf["bh"]
-            seen = {row[0] for row in self.claimed.get()}
-            mn = pdf[order_col].groupby(k).transform("min")
-            hit = (pdf[order_col] > mn).to_numpy() | k.isin(seen).to_numpy()
-            new = set(k) - seen
-            if new:
-                self.claimed.appendList([(nk,) for nk in new])
-            yield pd.DataFrame({id_col: pdf[id_col], "hit": hit})
-
-        def close(self) -> None:
-            pass
-
-    verdict_stream = sharded.groupBy("__shard").transformWithStateInPandas(
-        statefulProcessor=ShardClaims(),
-        outputStructType=f"{id_col} bigint, hit boolean",
-        outputMode="Update",
-        timeMode="None",
-    )
     return (
-        verdict_stream.writeStream.outputMode("update")
-        .foreachBatch(write_admitted)
+        tagged.writeStream.outputMode("append")
+        .foreachBatch(admit)
         .option("checkpointLocation", checkpoint_location)
         .start()
     )
 
 
 def read_neardup_tws_store(spark, store_path: str) -> DataFrame:
-    """Admitted doc ids of an ``ingest_neardup_stream_tws`` store."""
-    return spark.read.option("basePath", f"{store_path}/rows").parquet(
-        f"{store_path}/rows/__epoch=*"
-    ).drop("__epoch")
+    """Admitted doc ids of an ``ingest_neardup_stream_tws`` store. Its
+    ``rows/`` family has the parquet twin's layout, so this is
+    ``read_neardup_store``: committed ``rows/__epoch=N`` dirs only (a
+    torn dir of a crashed micro-batch carries no ``_SUCCESS`` and is
+    skipped)."""
+    return read_neardup_store(spark, store_path)
 
 
 def scd2_dimension_stream_parquet(
@@ -1532,10 +1407,12 @@ def scd2_dimension_stream_parquet(
 def read_scd2_dimension(spark, target_path: str) -> DataFrame:
     """Current SCD-2 history of a ``scd2_dimension_stream_parquet``
     view: all closed runs plus the latest epoch's open tails."""
-    closed = spark.read.option(
-        "basePath", f"{target_path}/closed"
-    ).parquet(f"{target_path}/closed/__epoch=*").drop("__epoch")
-    latest = max(txlog.partition_ids(spark, f"{target_path}/open"))
+    closed = compaction.read_family(spark, target_path, "closed")
+    if closed is None:
+        raise FileNotFoundError(f"empty SCD-2 view at {target_path}")
+    latest = max(
+        txlog.partition_ids(spark, f"{target_path}/open", committed=True)
+    )
     open_tails = (
         spark.read.option("basePath", f"{target_path}/open")
         .parquet(f"{target_path}/open/__epoch={latest}")
@@ -2004,27 +1881,29 @@ def skyline_stream_parquet(
             )
         )
         merged = batch_min
-        if txlog.partition_ids(spark, store_path):
-            prior_all = spark.read.option("basePath", store_path).parquet(
-                f"{store_path}/__epoch=*"
-            ).filter(F.col("__epoch") < F.lit(int(epoch_id)))
-            latest = prior_all.agg(F.max("__epoch").alias("e")).collect()[0].e
-            if latest is not None:
-                prior = prior_all.filter(F.col("__epoch") == latest).drop(
-                    "__epoch"
+        # the latest committed epoch below N, from a file listing, read
+        # with the state's known schema: no probe or inference job
+        prior_ids = [
+            e
+            for e in txlog.partition_ids(spark, store_path, committed=True)
+            if e < epoch_id
+        ]
+        if prior_ids:
+            prior = spark.read.schema(batch_min.schema).parquet(
+                f"{store_path}/__epoch={prior_ids[-1]}"
+            )
+            merged = (
+                prior.unionByName(batch_min)
+                .groupBy(group_col, value_col)
+                .agg(F.sum("n").cast("bigint").alias("n"))
+                .groupBy(group_col)
+                .agg(F.min(F.struct(value_col, "n")).alias("m"))
+                .select(
+                    group_col,
+                    F.col(f"m.{value_col}").alias(value_col),
+                    F.col("m.n").alias("n"),
                 )
-                merged = (
-                    prior.unionByName(batch_min)
-                    .groupBy(group_col, value_col)
-                    .agg(F.sum("n").cast("bigint").alias("n"))
-                    .groupBy(group_col)
-                    .agg(F.min(F.struct(value_col, "n")).alias("m"))
-                    .select(
-                        group_col,
-                        F.col(f"m.{value_col}").alias(value_col),
-                        F.col("m.n").alias("n"),
-                    )
-                )
+            )
         merged.coalesce(1).write.mode("overwrite").parquet(
             f"{store_path}/__epoch={epoch_id}"
         )
@@ -2043,11 +1922,10 @@ def read_skyline_store(
     """Current frontier of a ``skyline_stream_parquet`` store: the
     latest epoch's per-group minima with the cross-group dominance
     filter applied (a broadcast anti theta-join over the tiny state)."""
-    state = spark.read.option("basePath", store_path).parquet(
-        f"{store_path}/__epoch=*"
-    )
-    latest = state.agg(F.max("__epoch").alias("e")).collect()[0].e
-    cand = state.filter(F.col("__epoch") == latest).drop("__epoch")
+    ids = txlog.partition_ids(spark, store_path, committed=True)
+    if not ids:
+        raise FileNotFoundError(f"empty skyline store at {store_path}")
+    cand = spark.read.parquet(f"{store_path}/__epoch={ids[-1]}")
     dom = cand.select(
         F.col(group_col).alias("__dg"), F.col(value_col).alias("__dv")
     )

@@ -361,8 +361,8 @@ def test_stream_running_totals_tws_equals_v1(spark, sf_dir):
 
 def _with_rocksdb_provider(spark):
     """Context helper: set the RocksDB state-store provider and return
-    a restore callable (TWS requires it; tests restore to not leak
-    into sibling tests)."""
+    a restore callable (tests restore to not leak into sibling
+    tests)."""
     key = "spark.sql.streaming.stateStore.providerClass"
     try:
         prev = spark.conf.get(key)
@@ -383,12 +383,13 @@ def _with_rocksdb_provider(spark):
     return restore
 
 
-# default tier: the focused semantics test for the r14 shard-claims
-# rewrite of neardup_claims_stream_tws (operator internals changed)
+# default tier: the focused semantics test for the claim store of
+# neardup_claims_stream_tws (Spark's streaming dropDuplicates over band
+# keys), run on the RocksDB provider the benchmark uses
 def test_ingest_neardup_tws_rejects_duplicates_across_epochs(spark, tmp_path):
-    """The indexed-state-store (transformWithState) near-dup twin must
-    reject exact re-texts and lightly edited copies against earlier
-    epochs and admit unrelated docs — the same contract pinned on the
+    """The indexed-state-store near-dup twin must reject exact
+    re-texts and lightly edited copies against earlier epochs and
+    admit unrelated docs — the same contract pinned on the
     parquet-store variant."""
     import time
 
@@ -443,6 +444,132 @@ def test_ingest_neardup_tws_rejects_duplicates_across_epochs(spark, tmp_path):
     assert 1 in got and 12 in got
     assert 10 not in got
     assert 11 not in got
+
+
+def _neardup_tws_run(spark, in_dir, base):
+    """One ``ingest_neardup_stream_tws`` run to completion over
+    ``in_dir`` (store and checkpoint under ``base``); returns the
+    query for its id."""
+    from local_stream_stack_spark.streaming.ops import (
+        ingest_neardup_stream_tws,
+    )
+
+    q = ingest_neardup_stream_tws(
+        spark.readStream.schema("doc_id long, text string").parquet(in_dir),
+        id_col="doc_id",
+        text_col="text",
+        order_col="doc_id",
+        store_path=str(base / "store"),
+        checkpoint_location=str(base / "cp"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
+_FOX = (
+    "the quick brown fox jumps over the lazy dog while the cat "
+    "sleeps on the warm windowsill in the afternoon sun light"
+)
+_ENGINES = (
+    "completely different content about distributed query engines "
+    "and shuffle partitioning strategies for large scale analytics"
+)
+
+
+def test_ingest_neardup_tws_restart_keeps_state_layout(spark, tmp_path):
+    """A checkpoint restarted under a different
+    ``spark.sql.shuffle.partitions`` keeps the claims' state layout:
+    Spark reuses the partition count its offset log recorded, so an
+    exact duplicate of an epoch-0 doc is still rejected after the
+    restart and the dedup state keeps its 4 partitions."""
+    from local_stream_stack_spark.streaming.ops import read_neardup_tws_store
+
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(
+        [(1, _FOX), (2, _ENGINES)], "doc_id long, text string"
+    ).coalesce(1).write.parquet(in_dir)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "4")
+        _neardup_tws_run(spark, in_dir, tmp_path)
+        spark.createDataFrame(
+            [(10, _FOX)], "doc_id long, text string"
+        ).coalesce(1).write.mode("append").parquet(in_dir)
+        spark.conf.set(key, "3")
+        _neardup_tws_run(spark, in_dir, tmp_path)
+    finally:
+        spark.conf.set(key, prev)
+    got = {
+        r.doc_id
+        for r in read_neardup_tws_store(spark, str(tmp_path / "store")).collect()
+    }
+    assert got == {1, 2}
+    state = tmp_path / "cp" / "state" / "0"
+    assert sorted(p.name for p in state.iterdir() if p.name.isdigit()) == [
+        "0", "1", "2", "3",
+    ]
+
+
+def test_metrics_listener_reports_neardup_state(spark, tmp_path):
+    """MetricsListener rows carry the addBatch phase and the state
+    operators' commit time and row count: a near-dup stream's rows
+    report the band keys its dedup state holds."""
+    import time
+
+    from local_stream_stack_spark.streaming.metrics import MetricsListener
+
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(
+        [(1, _FOX), (2, _ENGINES)], "doc_id long, text string"
+    ).coalesce(1).write.parquet(in_dir)
+    listener = MetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        qid = str(_neardup_tws_run(spark, in_dir, tmp_path).id)
+        # progress events arrive on the listener bus thread
+        deadline = time.time() + 10
+        rows = []
+        while not rows and time.time() < deadline:
+            time.sleep(0.2)
+            rows = [
+                r for r in listener.snapshot()
+                if r["query_id"] == qid and r["num_input_rows"] > 0
+            ]
+    finally:
+        spark.streams.removeListener(listener)
+    assert rows, listener.snapshot()
+    # 2 docs x 8 bands, all distinct keys
+    assert rows[-1]["state_rows_total"] == 16
+    assert rows[-1]["add_batch_ms"] > 0
+    assert rows[-1]["state_commit_ms"] >= 0
+    mdf = listener.to_df(spark).filter(f"query_id = '{qid}'")
+    assert mdf.agg({"state_rows_total": "max"}).first()[0] == 16
+
+
+def test_read_neardup_tws_store_skips_torn_epoch(spark, tmp_path):
+    """A ``rows/__epoch=N`` dir without ``_SUCCESS`` (left by a
+    micro-batch that crashed before its parquet job committed) is not
+    read: the admitted set is the committed epochs' set."""
+    from local_stream_stack_spark.streaming.ops import read_neardup_tws_store
+
+    store = tmp_path / "store"
+    for e, ids in ((0, [1, 2]), (1, [10])):
+        spark.createDataFrame([(i,) for i in ids], "doc_id long").coalesce(
+            1
+        ).write.parquet(str(store / "rows" / f"__epoch={e}"))
+
+    def admitted():
+        return {r.doc_id for r in read_neardup_tws_store(spark, str(store)).collect()}
+
+    want = admitted()
+    torn = store / "rows" / "__epoch=9"
+    torn.mkdir()
+    (torn / "part-00000.snappy.parquet").write_bytes(b"not a parquet file")
+    assert admitted() == want == {1, 2, 10}
 
 
 @pytest.mark.soak
@@ -673,6 +800,31 @@ def test_scd2_dimension_carry_semantics(spark, tmp_path):
         (2, "B", 35, None),
         (3, "B", 15, None),  # carried forward untouched
     ]
+
+
+def test_read_scd2_dimension_skips_torn_epochs(spark, tmp_path):
+    """``closed/`` and ``open/`` epoch dirs without ``_SUCCESS`` (a
+    crashed micro-batch's torn write) are not read: the history is the
+    committed epochs' history."""
+    from local_stream_stack_spark.streaming.ops import read_scd2_dimension
+
+    view = tmp_path / "view"
+    spark.createDataFrame(
+        [(1, "A", 10, 40)],
+        "user_id long, event_type string, valid_from long, valid_to long",
+    ).coalesce(1).write.parquet(str(view / "closed" / "__epoch=0"))
+    spark.createDataFrame(
+        [(1, "B", 40)], "user_id long, event_type string, valid_from long"
+    ).coalesce(1).write.parquet(str(view / "open" / "__epoch=0"))
+    for family in ("closed", "open"):
+        torn = view / family / "__epoch=9"
+        torn.mkdir()
+        (torn / "part-00000.snappy.parquet").write_bytes(b"not a parquet file")
+    got = sorted(
+        (r.user_id, r.event_type, r.valid_from, r.valid_to)
+        for r in read_scd2_dimension(spark, str(view)).collect()
+    )
+    assert got == [(1, "A", 10, 40), (1, "B", 40, None)]
 
 
 @pytest.mark.soak

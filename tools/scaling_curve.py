@@ -489,17 +489,18 @@ def _decade_alphas(results: dict, labels: list[str]) -> dict:
 
 def stream_store_tws() -> None:
     """Store-growth probe for the INDEXED key store
-    (``neardup_claims_stream_tws`` — RocksDB transformWithState,
-    VERDICT r9 task #5): seed per-bucket claims by streaming N
+    (``neardup_claims_stream_tws`` — Spark's streaming dedup state over
+    band keys, VERDICT r9 task #5): seed the claims by streaming N
     synthetic band keys through the operator (untimed epoch 0), then
     time the SAME fixed 16,000-key probe epoch (2,000 docs x 8 bands,
     all novel buckets) against each store size. Isolates the
     state-lookup term the parquet probe measures as O(store scan):
-    here each probe key is one RocksDB point lookup, so the epoch
-    cost should stay FLAT across decades. The rowwise signature
-    compute is deliberately excluded — it is batch-constant at every
-    store size (the parquet probe carries it identically), and the
-    memory discipline is to isolate state growth with fixed epochs.
+    each probe key is one keyed state lookup + insert in the RocksDB
+    provider this probe sets, so the epoch cost should stay FLAT
+    across decades. The rowwise signature compute is deliberately
+    excluded — it is batch-constant at every store size (the parquet
+    probe carries it identically), and the memory discipline is to
+    isolate state growth with fixed epochs.
 
     Usage: python tools/scaling_curve.py stream_store_tws [s380k s3.8m s38m]
     """
@@ -507,7 +508,6 @@ def stream_store_tws() -> None:
 
     from local_stream_stack_spark.streaming.ops import (
         neardup_claims_stream_tws,
-        transform_with_state_supported,
     )
 
     spark = get_spark(
@@ -515,20 +515,11 @@ def stream_store_tws() -> None:
         extra_conf={"spark.driver.memory": "8g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    if not transform_with_state_supported():
-        print(json.dumps({"probe": "neardup_store_growth_tws",
-                          "error": "no TWS runtime"}))
-        spark.stop()
-        return
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
     )
-    par = spark.sparkContext.defaultParallelism
-    spark.range(par * 4, numPartitions=par).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
 
     def synth_keys(n_docs: int, id_base: int, salt: int):
         return (
