@@ -26,11 +26,13 @@ class MetricsListener(StreamingQueryListener):
 
     def __init__(self, max_events: int = 1000) -> None:
         self._events: deque = deque(maxlen=max_events)
+        self._started = 0
         self._lock = Lock()
 
     # StreamingQueryListener contract
     def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
+        with self._lock:
+            self._started += 1
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
@@ -54,6 +56,13 @@ class MetricsListener(StreamingQueryListener):
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass
+
+    def started(self) -> int:
+        """Queries started since the listener was added. Spark delivers
+        the start event before ``start()`` returns, so unlike progress
+        rows this count is never late."""
+        with self._lock:
+            return self._started
 
     def snapshot(self) -> list[dict]:
         with self._lock:

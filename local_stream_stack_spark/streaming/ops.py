@@ -1137,6 +1137,13 @@ def ingest_neardup_stream_tws(
     batch's keys: it tracks batch size, not corpus size. SCALE.md
     compares the two store shapes at the multi-decade key counts.
 
+    Each epoch scans its files ONCE and computes the band keys ONCE
+    (progress ``numInputRows`` = the batch's doc count): one hash
+    exchange on (band, bh) feeds both the raw key rows and the dedup,
+    and the fold's window reads that partitioning as is. That is 3
+    stages per epoch: keys + exchange write; dedup + window + partial
+    fold; final fold + write (``neardup_claims_stream_tws``).
+
     RETENTION IS UNBOUNDED. A claim is never dropped: there is no
     watermark on the dedup, so state grows with every distinct band
     key the stream has ever seen, for the life of the checkpoint.
@@ -1182,16 +1189,46 @@ def neardup_claims_stream_tws(
     so the store-growth probe (tools/scaling_curve.py stream_store_tws)
     can seed and measure the STATE-LOOKUP term with synthetic key
     streams, without paying the signature compute that is
-    batch-constant anyway."""
+    batch-constant anyway.
+
+    One pass per epoch: ``keys`` is repartitioned on (band, bh) to the
+    dedup state's partition count (the one the offset log recorded, on
+    restart), and the dedup runs on the raw rows of that exchange, so
+    it needs no exchange of its own. The two union children re-project
+    every column under its own name: only then are their exchange
+    subtrees canonically equal and Spark reuses one exchange (one scan,
+    one key computation) for both. The union keeps the hash
+    partitioning, so the ``foreachBatch`` window adds no exchange."""
     from pyspark.sql.window import Window
 
     # the raw key rows, plus one __fresh row per band key that the
-    # dedup state has not seen in an earlier epoch
-    raw = keys.select(*dict.fromkeys([id_col, order_col, "band", "bh"]))
-    fresh = keys.select("band", "bh").dropDuplicates()
-    tagged = raw.unionByName(
-        fresh.withColumn("__fresh", F.lit(True)), allowMissingColumns=True
+    # dedup state has not seen in an earlier epoch, both off one
+    # exchange as wide as the dedup state: on restart, the width the
+    # offset log recorded (any other width is correct, but Spark then
+    # shuffles again under the dedup)
+    spark = keys.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    width = txlog.recorded_confs(spark, checkpoint_location).get(
+        key, spark.conf.get(key)
     )
+    cols = list(dict.fromkeys([id_col, order_col, "band", "bh"]))
+    raw = keys.repartition(int(width), "band", "bh").select(*cols)
+    # a __fresh row is one of the batch's raw rows of its key, so the
+    # fold's min(order) over the key is unchanged by it
+    fresh = raw.dropDuplicates(["band", "bh"])
+
+    def tag(df: DataFrame, is_fresh) -> DataFrame:
+        # re-alias every column in BOTH children: otherwise the
+        # optimizer leaves the source rewrite's alias (doc_id#1 AS
+        # doc_id#0) under the first child only, the two exchange
+        # subtrees are not canonically equal, and Spark plans (and
+        # scans and keys) the batch twice instead of reusing one
+        return df.select(
+            *[F.col(c).alias(c) for c in cols],
+            F.lit(is_fresh).cast("boolean").alias("__fresh"),
+        )
+
+    tagged = tag(raw, None).unionByName(tag(fresh, True))
 
     def admit(batch_df: DataFrame, epoch_id: int) -> None:
         # a raw row hits when a lower-order doc shares its band key in

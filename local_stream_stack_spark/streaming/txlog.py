@@ -17,6 +17,8 @@ call, any supported scheme):
   children of a store directory, optionally only those whose parquet job
   committed (``_SUCCESS`` present).
 - :func:`delete` removes a directory tree.
+- :func:`recorded_confs` reads the SQL confs a streaming query's own
+  offset log recorded (Spark's checkpoint, not one of the stores').
 
 Two logs use it: the latest-per-key upsert's per-epoch manifests
 (``<view>/_manifests``) and the compactor's generation manifests
@@ -72,17 +74,40 @@ def read_commits(spark, log_dir: str) -> dict[int, dict]:
         name = st.getPath().getName()
         if not _COMMIT_NAME.fullmatch(name):
             continue
-        stream = fs.open(st.getPath())
-        try:
-            text = (
-                jvm.java.util.Scanner(stream, "UTF-8")
-                .useDelimiter("\\A")
-                .next()
-            )
-        finally:
-            stream.close()
+        text = _read_text(fs, st.getPath(), jvm)
         out[int(name[: -len(".json")])] = json.loads(text)
     return out
+
+
+def _read_text(fs, path, jvm) -> str:
+    stream = fs.open(path)
+    try:
+        return jvm.java.util.Scanner(stream, "UTF-8").useDelimiter("\\A").next()
+    finally:
+        stream.close()
+
+
+def recorded_confs(spark, checkpoint_location: str) -> dict[str, str]:
+    """The SQL confs that Spark recorded in the newest entry of the
+    offset log under ``checkpoint_location`` ({} before the query's
+    first batch). A restarted query runs its stateful operators with
+    these values (``spark.sql.shuffle.partitions`` among them), not
+    with the live session's. An entry is ``v1``, then one JSON line of
+    batch metadata, then one line per source offset."""
+    log_dir = checkpoint_location.rstrip("/") + "/offsets"
+    fs, p, jvm = _fs(spark, log_dir)
+    if not fs.exists(p):
+        return {}
+    ids = [
+        int(st.getPath().getName())
+        for st in fs.listStatus(p)
+        if re.fullmatch(r"\d+", st.getPath().getName())
+    ]
+    if not ids:
+        return {}
+    Path = jvm.org.apache.hadoop.fs.Path
+    text = _read_text(fs, Path(f"{log_dir}/{max(ids)}"), jvm)
+    return json.loads(text.split("\n")[1]).get("conf", {})
 
 
 def partition_ids(

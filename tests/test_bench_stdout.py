@@ -67,6 +67,38 @@ def test_bench_stdout_is_single_json_line_with_streaming_query(tmp_path):
     assert "stream_tumbling_counts" in payload["queries"]
 
 
+def test_bench_streaming_detail_for_non_stream_prefixed_entry(tmp_path, sf_dir):
+    """An entry runs a live stream whatever its name: ``pyds_stream_agg``
+    (a Python DataSource stream) gets its per-batch detail because the
+    run's listener saw its query start, not because of a name prefix."""
+    detail_path = tmp_path / "detail.json"
+    env = dict(os.environ)
+    env.update(
+        {
+            "SPARK_GRAFT_SF_DIR": sf_dir,
+            "SPARK_GRAFT_BENCH_RUNS": "1",
+            "SPARK_GRAFT_BENCH_QUERIES": "pyds_stream_agg",
+            "SPARK_GRAFT_CPUS": "4",
+            "SPARK_GRAFT_BENCH_DETAIL": str(detail_path),
+        }
+    )
+    proc = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "bench.py")],
+        capture_output=True,
+        text=True,
+        env=env,
+        cwd=ROOT,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    entry = json.load(open(detail_path))["queries_streaming_detail"][
+        "pyds_stream_agg"
+    ]
+    # 50k rows served in 10k-row micro-batches
+    assert entry["batches"] >= 5, entry
+    assert entry["batch_ms_sum"] > 0
+
+
 def test_subset_bench_never_clobbers_full_detail_artifact():
     """VERDICT r11 #3: a subset run (SPARK_GRAFT_BENCH_QUERIES set,
     no explicit detail path) writes BENCH_DETAIL.partial.json and

@@ -7,6 +7,8 @@ plan produces exactly the batch result on a bounded replay.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from local_stream_stack_spark.queries.streaming_e2e import (
@@ -469,6 +471,26 @@ def _neardup_tws_run(spark, in_dir, base):
     return q
 
 
+def _plan_nodes(plan: str) -> list[str]:
+    """Operator names of the tree part of an explained physical plan,
+    top-down, one per node line (``*(2) Project [...]`` and, in the
+    formatted mode, ``* Project (5)`` -> Project)."""
+    tree = plan.split("== Physical Plan ==")[-1].strip().split("\n\n")[0]
+    return re.findall(r"^[\s:|+-]*(?:\*(?:\(\d+\))? )?(\w+)", tree, re.M)
+
+
+def _assert_single_pass(q, n_docs: int) -> None:
+    """The near-dup stream's last epoch read its ``n_docs`` source rows
+    once: its plan scans the files once and keys them once, and the
+    dedup branch reuses the raw branch's exchange."""
+    epochs = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert epochs[-1]["numInputRows"] == n_docs
+    nodes = _plan_nodes(q._jsq.explainInternal(False))
+    assert nodes.count("FileScan") == 1, nodes
+    assert nodes.count("Exchange") == 1, nodes
+    assert nodes.count("ReusedExchange") == 1, nodes
+
+
 _FOX = (
     "the quick brown fox jumps over the lazy dog while the cat "
     "sleeps on the warm windowsill in the afternoon sun light"
@@ -500,7 +522,7 @@ def test_ingest_neardup_tws_restart_keeps_state_layout(spark, tmp_path):
             [(10, _FOX)], "doc_id long, text string"
         ).coalesce(1).write.mode("append").parquet(in_dir)
         spark.conf.set(key, "3")
-        _neardup_tws_run(spark, in_dir, tmp_path)
+        q = _neardup_tws_run(spark, in_dir, tmp_path)
     finally:
         spark.conf.set(key, prev)
     got = {
@@ -512,6 +534,50 @@ def test_ingest_neardup_tws_restart_keeps_state_layout(spark, tmp_path):
     assert sorted(p.name for p in state.iterdir() if p.name.isdigit()) == [
         "0", "1", "2", "3",
     ]
+    # the restarted epoch still reads its source once: the shared
+    # exchange takes the 4 partitions the offset log recorded (not the
+    # live 3), so the dedup needs no exchange of its own
+    _assert_single_pass(q, 1)
+
+
+def test_ingest_neardup_tws_reads_each_batch_once(spark, tmp_path):
+    """One epoch of N docs is scanned and keyed once: the progress
+    reports N input rows, the plan holds one FileScan whose one
+    exchange on (band, bh) the dedup branch reuses, and the
+    ``foreachBatch`` fold's window reads that partitioning without an
+    exchange of its own."""
+    import time
+
+    in_dir = str(tmp_path / "in")
+    docs = [(1, _FOX), (2, _ENGINES), (3, _FOX), (4, "one two"), (5, None)]
+    spark.createDataFrame(docs, "doc_id long, text string").coalesce(
+        1
+    ).write.parquet(in_dir)
+    q = _neardup_tws_run(spark, in_dir, tmp_path)
+    _assert_single_pass(q, len(docs))
+
+    # the fold's write is its own SQL execution; find it by its path
+    store = spark._jsparkSession.sharedState().statusStore()
+    target = str(tmp_path / "store" / "rows" / "__epoch=0")
+    deadline = time.time() + 10
+    plans = []
+    while not plans and time.time() < deadline:
+        execs = store.executionsList()
+        plans = [
+            d
+            for d in (
+                execs.apply(i).physicalPlanDescription()
+                for i in range(execs.size())
+            )
+            if target in d and "Window" in d
+        ]
+        time.sleep(0.2)
+    assert plans
+    nodes = _plan_nodes(plans[-1])
+    below = nodes[nodes.index("Window"):]
+    assert not {"Exchange", "ShuffleQueryStage", "AQEShuffleRead"} & set(
+        below
+    ), nodes
 
 
 def test_metrics_listener_reports_neardup_state(spark, tmp_path):
@@ -530,6 +596,8 @@ def test_metrics_listener_reports_neardup_state(spark, tmp_path):
     spark.streams.addListener(listener)
     try:
         qid = str(_neardup_tws_run(spark, in_dir, tmp_path).id)
+        # the start event is delivered before start() returns
+        assert listener.started() == 1
         # progress events arrive on the listener bus thread
         deadline = time.time() + 10
         rows = []
@@ -542,6 +610,8 @@ def test_metrics_listener_reports_neardup_state(spark, tmp_path):
     finally:
         spark.streams.removeListener(listener)
     assert rows, listener.snapshot()
+    # each doc is read once
+    assert rows[-1]["num_input_rows"] == 2
     # 2 docs x 8 bands, all distinct keys
     assert rows[-1]["state_rows_total"] == 16
     assert rows[-1]["add_batch_ms"] > 0

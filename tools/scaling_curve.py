@@ -31,6 +31,7 @@ import json
 import math
 import os
 import shutil
+import subprocess
 import sys
 import time
 
@@ -45,6 +46,25 @@ SRC = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
 OUT = os.path.join(ROOT, ".scale")
 DIMS = ["region", "nation", "customer", "supplier", "part"]
 FACTS = ["orders", "lineitem", "events", "documents", "embeddings"]
+
+
+def _stop_spark(spark) -> None:
+    """Stop the session and wait until its JVM has exited. A RocksDB
+    state store still open at JVM exit can hang the process in native
+    exit code after Spark's shutdown hooks have run (it then ignores
+    SIGTERM and outlives the script), so close every loaded state store
+    first. The gateway JVM exits when its stdin closes."""
+    proc = spark.sparkContext._gateway.proc
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    spark.stop()
+    proc.stdin.close()
+    try:
+        proc.wait(timeout=60)
+    except subprocess.TimeoutExpired:
+        print("the Spark JVM did not exit; killing it", file=sys.stderr)
+        proc.kill()
+        proc.wait()
+
 
 # the heavy / scale-relevant slice of the catalog (headline + extended)
 MEASURED = [
@@ -217,7 +237,7 @@ def gen(replicas: int = 10, only_facts: list[str] | None = None) -> None:
             full.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
             n = spark.read.parquet(f"{out_dir}/{t}.parquet").count()
             print(f"{scale}/{t}: {n} rows")
-    spark.stop()
+    _stop_spark(spark)
 
 
 def run(
@@ -260,7 +280,7 @@ def run(
                 best = min(best or 9e9, time.time() - t0)
             results.setdefault(name, {})[scale] = round(best, 3)
             print(f"{scale} {name}: {best:.3f}s", file=sys.stderr)
-    spark.stop()
+    _stop_spark(spark)
 
     lo, hi = scales
     # decades between the two corpora (x1 -> x10 = 1 decade,
@@ -354,7 +374,7 @@ def stream_store() -> None:
         print(f"{scale}: {n_keys} admitted keys, fixed epoch {dt:.3f}s",
               file=sys.stderr)
         shutil.rmtree(base, ignore_errors=True)
-    spark.stop()
+    _stop_spark(spark)
     alpha = math.log10(
         max(results["x10"]["epoch_sec"], 1e-9)
         / max(results["x1"]["epoch_sec"], 1e-9)
@@ -467,7 +487,7 @@ def stream_store_synth() -> None:
         print(f"{label}: {n_keys} seeded keys, fixed epoch {dt:.3f}s",
               file=sys.stderr)
         shutil.rmtree(base, ignore_errors=True)
-    spark.stop()
+    _stop_spark(spark)
     alphas = _decade_alphas(results, labels)
     print(json.dumps({"probe": "neardup_store_growth_synth",
                       "results": results, "alphas": alphas}))
@@ -589,7 +609,7 @@ def stream_store_tws() -> None:
         print(f"{label}: {n_keys} seeded keys, fixed epoch {dt:.3f}s",
               file=sys.stderr)
         shutil.rmtree(base, ignore_errors=True)
-    spark.stop()
+    _stop_spark(spark)
     alphas = _decade_alphas(results, labels)
     print(json.dumps({"probe": "neardup_store_growth_tws",
                       "results": results, "alphas": alphas}))
