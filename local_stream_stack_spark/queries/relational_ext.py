@@ -20,7 +20,7 @@ side; semi/anti forms never materialize the probe payload.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -33,6 +33,121 @@ from local_stream_stack_spark.queries.relational import (
     _sum_round,
 )
 from local_stream_stack_spark.utils.ts import epoch_us
+
+
+def _daily_revenue(
+    spark: SparkSession,
+    sf_dir: str,
+    where: str | None = None,
+    extra: Column | None = None,
+    pin: str | None = None,
+    by_segment: bool = False,
+) -> DataFrame:
+    """The calendar-day revenue series of ``orders``: ``di`` (days
+    since 1970-01-01) and ``rev_c`` (the day's exact sum of cents),
+    the input of the daily time-series tests. Its oracle twin is
+    `_days_cte`. The corpus collapses to this calendar-bounded grain
+    first, so every later stage, even a |days|² pair stage, is bounded
+    by the calendar, never by corpus rows.
+
+    ``where`` is a SQL predicate applied to ``orders`` first (the same
+    text `_days_cte` splices in). ``extra`` is one more aggregate
+    column. ``by_segment`` groups by ``(di, segment)`` over a broadcast
+    customer join (see `_segment_blocks`).
+
+    ``pin`` materializes the small table once for its many consumers
+    (guide §5): ``"plain"`` pins it, ``"spread"`` first repartitions it
+    over the cores. Two r13 measurements set where each goes:
+
+    - Spread a table that streams through a theta-join or cross join.
+      AQE coalesces the tiny aggregate to ONE partition, so every
+      pair pass downstream would run on a single core. A table that
+      is only broadcast or grouped needs no spread.
+    - Pin the day tables, not the |days|² slope or difference relation
+      built from them. Materializing the pairs cost more (Mann-Kendall
+      1.4x slower, Hodges-Lehmann 2x) than regenerating them per rank
+      pass from the pinned day table through a codegen broadcast join
+      with no shuffle (guide §1.1)."""
+    o = _t(spark, sf_dir, "orders")
+    if where is not None:
+        o = o.filter(F.expr(where))
+    keys = [
+        F.unix_date(F.col("o_orderdate").cast("date"))
+        .cast("bigint")
+        .alias("di")
+    ]
+    if by_segment:
+        c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        o = o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        keys.append(F.col("c_mktsegment").alias("segment"))
+    aggs = [
+        F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
+        .cast("bigint")
+        .alias("rev_c")
+    ]
+    if extra is not None:
+        aggs.append(extra)
+    days = o.groupBy(*keys).agg(*aggs)
+    if pin == "spread":
+        days = days.repartition(spark.sparkContext.defaultParallelism)
+    if pin is not None:
+        days = days.localCheckpoint(eager=True)
+    return days
+
+
+def _days_cte(
+    name: str = "days", where: str | None = None, extra: str = ""
+) -> str:
+    """DuckDB twin of `_daily_revenue`: the ``name AS (...)`` CTE of
+    (di, rev_c) per calendar day, for an oracle's WITH list. ``extra``
+    is appended to the select list as written (``", <expr> AS col"``)."""
+    where_sql = f" WHERE {where}" if where else ""
+    return f"""{name} AS (
+      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
+               AS di,
+             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               AS rev_c{extra}
+      FROM orders{where_sql} GROUP BY 1
+    )"""
+
+
+_DAYS_CTE = _days_cte()
+
+
+def _segment_blocks(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The day-blocked segment design of the k-related-samples tests:
+    ``cells`` (di, segment, rev_c), pinned, since it fans out into k,
+    the complete-block filter and the rank consumers (~6 join+groupBy
+    re-executions otherwise); ``kk``, one row holding k, the number of
+    segments; and ``full_days``, the days that have all k segments
+    (complete blocks only). Its oracle twin is `_SEGMENT_BLOCKS_CTE`."""
+    cells = _daily_revenue(spark, sf_dir, pin="plain", by_segment=True)
+    kk = cells.agg(F.countDistinct("segment").cast("bigint").alias("k"))
+    full_days = (
+        cells.crossJoin(F.broadcast(kk))
+        .groupBy("di", "k")
+        .agg(F.count("*").alias("__cnt"))
+        .filter(F.col("__cnt") == F.col("k"))
+        .select("di")
+    )
+    return cells, kk, full_days
+
+
+_SEGMENT_BLOCKS_CTE = """cells AS (
+      SELECT CAST(CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
+               AS di,
+             c.c_mktsegment AS segment,
+             CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               AS rev_c
+      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+      GROUP BY 1, 2
+    ),
+    kk AS (SELECT CAST(COUNT(DISTINCT segment) AS BIGINT) AS k FROM cells),
+    full_days AS (
+      SELECT di FROM cells CROSS JOIN kk GROUP BY di, k HAVING COUNT(*) = k
+    )"""
 
 
 def _adjacent_slope_ext(days: DataFrame, slope_sql: str) -> DataFrame:
@@ -3314,15 +3429,8 @@ def spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "theil_sen_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders
-      GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     slopes AS (
       SELECT CAST(b.rev_c - a.rev_c AS DOUBLE) / (b.di - a.di) AS slope
       FROM days a JOIN days b ON b.di > a.di
@@ -3344,12 +3452,10 @@ def theil_sen_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen estimator of the daily-revenue trend: the (lower)
     median of all pairwise day-to-day slopes — the robust regression
     line the OLS fit (`regression_by_nation`) is not, immune to
-    outlier days. The corpus collapses to the bounded calendar-day
-    grain FIRST (one hash aggregate), so the quadratic pair
-    enumeration runs over |days|² via a broadcast theta-join (~3M
-    pairs here, bounded by the calendar, never by corpus rows); each
-    slope is ONE division of exact integer diffs (identical doubles
-    on both engines), and the median is picked by exact rank-SELECT
+    outlier days. The quadratic pair enumeration runs over |days|²
+    via a broadcast theta-join (~3M pairs here); each slope is ONE
+    division of exact integer diffs (identical doubles on both
+    engines), and the median is picked by exact rank-SELECT
     (`values_at_global_ranks` — bin counts + in-target-bin
     refinement), not a single-reducer sort and not a full distributed
     rank: only the median position is consumed, so ranking every
@@ -3362,29 +3468,9 @@ def theil_sen_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         values_at_global_ranks,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    # pin the calendar-day aggregate once (~|days| rows): it feeds both
-    # theta-join sides plus n_days, and every rank pass over the lazy
-    # slope relation re-derives it — checkpointing the SMALL day table
-    # (not the |days|² slopes) is the cheap side of the guide §5 trade
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-        # spread the tiny day table over the cores BEFORE pinning: AQE
-        # coalesces the aggregate to ONE partition, which would run
-        # every downstream broadcast theta-join pass single-threaded
-        # (measured r13: the whole pair stage serialized onto one core)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
+    # pinned: the day table feeds both theta-join sides plus n_days,
+    # and every rank pass over the lazy slope relation re-derives it
+    days = _daily_revenue(spark, sf_dir, pin="spread")
     a = days.select(F.col("di").alias("dia"), F.col("rev_c").alias("ra"))
     b = days.select(F.col("di").alias("dib"), F.col("rev_c").alias("rb"))
     slopes = (
@@ -3396,11 +3482,6 @@ def theil_sen_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("slope"),
         )
     )
-    # measured (r13): materializing the ~3M-row slope relation cost
-    # MORE than regenerating it per rank pass from the checkpointed
-    # day table — the broadcast theta-join is codegen with no
-    # shuffle, so only `days` is worth pinning (guide §1.1 —
-    # re-measure, don't assume)
     ranks = days.agg(F.count("*").cast("bigint").alias("n_days")).select(
         "n_days",
         F.expr("n_days * (n_days - 1) div 2").cast("bigint").alias("__m"),
@@ -3432,15 +3513,8 @@ def theil_sen_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pettitt_changepoint_daily",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders
-      GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     vals AS (
       SELECT rev_c, CAST(COUNT(*) AS BIGINT) AS cnt FROM days GROUP BY rev_c
     ),
@@ -3481,26 +3555,14 @@ def pettitt_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     earliest day attaining K; the significance exponent
     6K²/(n³+n²) is emitted e6-scaled through the overflow-safe
     HUGEINT/DECIMAL division idiom instead of exp() (not
-    cross-engine-stable). Scale: collapse to the bounded calendar-day
-    grain, rank map over distinct values, ONE distributed cumulative
-    sum (with_global_rank — no single-reducer sort), bounded finals."""
+    cross-engine-stable). Scale: rank map over distinct values, ONE
+    distributed cumulative sum (with_global_rank — no single-reducer
+    sort), bounded finals."""
     from local_stream_stack_spark.operators.quantiles import (
         with_global_rank,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-    )
+    days = _daily_revenue(spark, sf_dir)
     vals = days.groupBy("rev_c").agg(
         F.count("*").cast("bigint").alias("cnt")
     )
@@ -3966,14 +4028,8 @@ def anova_f_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "conformal_forecast_intervals",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     resid AS (
       SELECT a.di, abs(a.rev_c - b.rev_c) AS ar,
              CAST(('0x' || substr(md5(CAST(a.di AS VARCHAR)), 1, 4))
@@ -4014,25 +4070,12 @@ def conformal_forecast_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     split is the deterministic md5-bucket idiom, q_hat is an exact
     order statistic (rank-selected via the distributed-rank operator,
     never a single-reducer sort), and coverage uses the overflow-safe
-    division idiom. Scale: day-grain collapse first; all later stages
-    are calendar-bounded."""
+    division idiom."""
     from local_stream_stack_spark.operators.quantiles import (
         with_global_rank,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-    )
+    days = _daily_revenue(spark, sf_dir)
     prev = days.select(
         (F.col("di") + 7).alias("di"), F.col("rev_c").alias("prev_c")
     )
@@ -4093,20 +4136,8 @@ def conformal_forecast_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "friedman_test_segments",
-    oracle="""
-    WITH cells AS (
-      SELECT CAST(CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             c.c_mktsegment AS segment,
-             CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY 1, 2
-    ),
-    kk AS (SELECT CAST(COUNT(DISTINCT segment) AS BIGINT) AS k FROM cells),
-    full_days AS (
-      SELECT di FROM cells CROSS JOIN kk GROUP BY di, k HAVING COUNT(*) = k
-    ),
+    oracle=f"""
+    WITH {_SEGMENT_BLOCKS_CTE},
     r AS (
       SELECT c.di, c.segment,
              CAST(2 * RANK() OVER (PARTITION BY c.di ORDER BY c.rev_c)
@@ -4141,36 +4172,7 @@ def friedman_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact integer rank sums, rounded once to e6. Scale: one
     broadcast dim join + one hash aggregate to the (day, segment)
     grid; every window partition is exactly k rows."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cells = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-        # same fan-out as cochran_q_daily/page_trend: pin the tiny
-        # (day, segment) grid once instead of ~6 re-executions
-        # (guide §5)
-        .localCheckpoint(eager=True)
-    )
-    kk = cells.agg(
-        F.countDistinct("segment").cast("bigint").alias("k")
-    )
-    full_days = (
-        cells.crossJoin(F.broadcast(kk))
-        .groupBy("di", "k")
-        .agg(F.count("*").alias("__cnt"))
-        .filter(F.col("__cnt") == F.col("k"))
-        .select("di")
-    )
+    cells, kk, full_days = _segment_blocks(spark, sf_dir)
     wd = Window.partitionBy("di").orderBy("rev_c")
     we = Window.partitionBy("di", "rev_c")
     r = (
@@ -4373,21 +4375,9 @@ def levene_brown_forsythe_segments(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "hodges_lehmann_urgent_shift",
-    oracle="""
-    WITH xd AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1
-    ),
-    yd AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders WHERE o_orderpriority <> '1-URGENT' GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_days_cte("xd", "o_orderpriority = '1-URGENT'")},
+    {_days_cte("yd", "o_orderpriority <> '1-URGENT'")},
     vals AS (
       SELECT x.rev_c - y.rev_c AS d, CAST(COUNT(*) AS BIGINT) AS cnt
       FROM xd x CROSS JOIN yd y
@@ -4417,10 +4407,9 @@ def hodges_lehmann_urgent_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-urgent DAILY revenue: the median of all pairwise differences —
     the robust effect-size companion to the Mann-Whitney test (which
     only says WHETHER the distributions differ, not by how much).
-    Day-grain collapse first, so the quadratic pair stage is
-    |days_x|*|days_y| via a broadcast nested-loop cross join (bounded
-    by the calendar, never corpus rows); the doubled median (exact
-    even-n averaging without leaving integers) is picked by exact
+    The quadratic pair stage is |days_x|*|days_y| via a broadcast
+    nested-loop cross join; the doubled median (exact even-n
+    averaging without leaving integers) is picked by exact
     rank-SELECT (`values_at_global_ranks` — bin counts +
     in-target-bin refinement): m = |days_x|*|days_y| is known from
     the two day counts, so only the two median positions are ever
@@ -4432,40 +4421,13 @@ def hodges_lehmann_urgent_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         values_at_global_ranks,
     )
 
-    o = _t(spark, sf_dir, "orders")
-
-    def daily(pred: str):
-        return (
-            o.filter(F.expr(pred))
-            .groupBy(
-                F.unix_date(F.col("o_orderdate").cast("date"))
-                .cast("bigint")
-                .alias("di")
-            )
-            .agg(
-                F.sum(
-                    F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)")
-                )
-                .cast("bigint")
-                .alias("rev_c")
-            )
-        )
-
-    # pin the two tiny day tables (~|days| rows each), NOT the diff
-    # histogram: measured (r13) — checkpointing the ~|days_x|*|days_y|
-    # distinct-diff relation doubled the query (millions of rows
-    # written for nothing), while regenerating it per consumer from
-    # the pinned day tables is a no-shuffle broadcast cross join.
-    # Guide §5/§1.1 (measure, don't assume).
-    # xd streams through the cross join — spread it over the cores
-    # before pinning (AQE coalesces the aggregate to one partition,
-    # serializing every pair pass); yd only ever broadcasts
-    xd = (
-        daily("o_orderpriority = '1-URGENT'")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
+    # xd streams through the cross join; yd only ever broadcasts
+    xd = _daily_revenue(
+        spark, sf_dir, "o_orderpriority = '1-URGENT'", pin="spread"
     )
-    yd = daily("o_orderpriority <> '1-URGENT'").localCheckpoint(eager=True)
+    yd = _daily_revenue(
+        spark, sf_dir, "o_orderpriority <> '1-URGENT'", pin="plain"
+    )
     diffs = (
         xd.select(F.col("rev_c").alias("xr"))
         .crossJoin(F.broadcast(yd.select(F.col("rev_c").alias("yr"))))
@@ -4519,15 +4481,8 @@ def hodges_lehmann_urgent_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kendall_tau_daily",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c,
-             CAST(COUNT(*) AS BIGINT) AS n_ord
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_days_cte(extra=", CAST(COUNT(*) AS BIGINT) AS n_ord")},
     pairs AS (
       SELECT b.rev_c - a.rev_c AS dx, b.n_ord - a.n_ord AS dy
       FROM days a JOIN days b ON b.di > a.di
@@ -4556,24 +4511,13 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     order count — the concordance member of the correlation family
     (Pearson via `corr_matrix_lineitem`, Spearman via
     `spearman_qty_price`); tau-b's pair semantics make it robust to
-    ties and monotone transforms. Day-grain collapse first; the
-    quadratic pair stage is |days|² via broadcast theta-join
-    (calendar-bounded); concordant/discordant/tie counts are exact
-    integers, and tau-b is one double tree (the only irrational is a
-    single correctly-rounded sqrt), rounded once to e6."""
-    o = _t(spark, sf_dir, "orders")
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c"),
-            F.count("*").cast("bigint").alias("n_ord"),
-        )
+    ties and monotone transforms. The quadratic pair stage is
+    |days|² via broadcast theta-join; concordant/discordant/tie counts
+    are exact integers, and tau-b is one double tree (the only
+    irrational is a single correctly-rounded sqrt), rounded once to
+    e6."""
+    days = _daily_revenue(
+        spark, sf_dir, extra=F.count("*").cast("bigint").alias("n_ord")
     )
     a = days.select(
         F.col("di").alias("dia"),
@@ -4629,14 +4573,8 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "seasonal_decomposition_weekday",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     nb AS (
       SELECT d.di, d.rev_c,
              CAST(COUNT(*) AS BIGINT) AS n_nb,
@@ -4672,19 +4610,7 @@ def seasonal_decomposition_weekday(spark: SparkSession, sf_dir: str) -> DataFram
     equi-join on exploded day offsets against the broadcast day grain
     — no ordered-global window anywhere. ISO weekday via the portable
     idiom (Spark weekday()+1 == DuckDB isodow)."""
-    o = _t(spark, sf_dir, "orders")
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-    )
+    days = _daily_revenue(spark, sf_dir)
     nbr = days.select(
         F.col("di").alias("dj"), F.col("rev_c").alias("rev_j")
     )
@@ -4856,14 +4782,8 @@ def kruskal_wallis_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "runs_test_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     vals AS (
       SELECT rev_c, CAST(COUNT(*) AS BIGINT) AS cnt FROM days GROUP BY rev_c
     ),
@@ -4917,25 +4837,12 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (t ⋈ t−1) over the calendar-bounded day relation instead of an
     unpartitioned LAG window; n₁/n₂/R are exact BIGINTs and the
     normal-approximation z is one identical double tree rounded once
-    to e6. Scale: day-grain collapse first; everything after is
-    calendar-bounded."""
+    to e6."""
     from local_stream_stack_spark.operators.quantiles import (
         with_global_rank,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-    )
+    days = _daily_revenue(spark, sf_dir)
     vals = days.groupBy("rev_c").agg(
         F.count("*").cast("bigint").alias("cnt")
     )
@@ -5202,14 +5109,8 @@ def holt_linear_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mann_kendall_trend_daily",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     pairs AS (
       SELECT b.rev_c - a.rev_c AS dx, b.di - a.di AS dd
       FROM days a JOIN days b ON b.di > a.di
@@ -5265,9 +5166,8 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone-trend member of the statistics family (Kendall tau-b
     correlates TWO series; MK asks whether ONE series trends against
     time, and Sen's slope is its robust effect size — the standard
-    pre-forecasting screen). Day-grain collapse first, so the
-    quadratic pair stage is |days|² via broadcast theta-join
-    (calendar-bounded); S and the tie-corrected 18·Var(S) are exact
+    pre-forecasting screen). The quadratic pair stage is |days|² via
+    broadcast theta-join; S and the tie-corrected 18·Var(S) are exact
     integers; z is one double tree (single sqrt) rounded once to e6;
     Sen's slope floors each pairwise slope once to an e6 integer and
     takes the doubled median via exact rank-SELECT
@@ -5277,31 +5177,9 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         values_at_global_ranks,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    # pin the calendar-day aggregate once: it feeds both theta-join
-    # sides, ties and nn, and every consumer of the lazy pair relation
-    # re-derives it. Measured (r13): checkpointing the |days|² PAIRS
-    # instead was 1.4x SLOWER — materializing millions of pair rows
-    # costs more than regenerating them from the tiny pinned day table
-    # (broadcast theta-join, codegen, no shuffle). Guide §5/§1.1.
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-        # spread the tiny day table over the cores BEFORE pinning: AQE
-        # coalesces the aggregate to ONE partition, which would run
-        # every downstream broadcast theta-join pass single-threaded
-        # (measured r13: the whole pair stage serialized onto one core)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
+    # pinned: the day table feeds both theta-join sides, ties and nn,
+    # and every consumer of the lazy pair relation re-derives it
+    days = _daily_revenue(spark, sf_dir, pin="spread")
     a = days.select(F.col("di").alias("dia"), F.col("rev_c").alias("ra"))
     b = days.select(F.col("di").alias("dib"), F.col("rev_c").alias("rb"))
     pairs = a.join(F.broadcast(b), F.col("dib") > F.col("dia")).select(
@@ -5397,14 +5275,8 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "durbin_watson_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     nn AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(rev_c) AS BIGINT) AS s
@@ -5448,19 +5320,7 @@ def durbin_watson_daily_revenue(
         with_global_rank,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-    )
+    days = _daily_revenue(spark, sf_dir)
     nn = days.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("rev_c").cast("bigint").alias("s"),
@@ -5495,14 +5355,8 @@ def durbin_watson_daily_revenue(
 
 @query(
     "ljung_box_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     nn AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(rev_c) AS BIGINT) AS s
@@ -5552,25 +5406,13 @@ def ljung_box_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double tree floored once to an e9 integer, and the
     final Q = n(n+2)·Σterms is pure INTEGER arithmetic (the e9→e6
     rescale is integer division) — no float summation across lags on
-    either engine. Scale: day-grain collapse first; the 7 lag joins
-    run on the calendar-bounded rank relation."""
+    either engine. Scale: the 7 lag joins run on the calendar-bounded
+    rank relation."""
     from local_stream_stack_spark.operators.quantiles import (
         with_global_rank,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    days = (
-        o.groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di")
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-    )
+    days = _daily_revenue(spark, sf_dir)
     nn = days.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("rev_c").cast("bigint").alias("s"),
@@ -5630,20 +5472,8 @@ def ljung_box_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cochran_q_daily",
-    oracle="""
-    WITH cells AS (
-      SELECT CAST(CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             c.c_mktsegment AS segment,
-             CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY 1, 2
-    ),
-    kk AS (SELECT CAST(COUNT(DISTINCT segment) AS BIGINT) AS k FROM cells),
-    full_days AS (
-      SELECT di FROM cells CROSS JOIN kk GROUP BY di, k HAVING COUNT(*) = k
-    ),
+    oracle=f"""
+    WITH {_SEGMENT_BLOCKS_CTE},
     fc AS (
       SELECT c.di, c.segment, c.rev_c FROM cells c
       JOIN full_days f ON c.di = f.di
@@ -5700,35 +5530,7 @@ def cochran_q_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     over two exact integers, rounded once to e6. Scale: one broadcast
     dim join + hash aggregate to the (day, segment) grid; every
     window partition is exactly k rows."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cells = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-        # the (day, segment) grid aggregate fans out into k, the
-        # complete-block filter and the downstream rank/indicator
-        # consumers — pin the ~|days|*k-row grid once instead of ~6
-        # join+groupBy re-executions (guide §5)
-        .localCheckpoint(eager=True)
-    )
-    kk = cells.agg(F.countDistinct("segment").cast("bigint").alias("k"))
-    full_days = (
-        cells.crossJoin(F.broadcast(kk))
-        .groupBy("di", "k")
-        .agg(F.count("*").alias("__cnt"))
-        .filter(F.col("__cnt") == F.col("k"))
-        .select("di")
-    )
+    cells, kk, full_days = _segment_blocks(spark, sf_dir)
     fc = cells.join(full_days, "di")
     wcw = Window.partitionBy("di").orderBy("rev_c", "segment")
     wall = Window.partitionBy("di")
@@ -5806,20 +5608,8 @@ def cochran_q_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "page_trend_test_segments",
-    oracle="""
-    WITH cells AS (
-      SELECT CAST(CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             c.c_mktsegment AS segment,
-             CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY 1, 2
-    ),
-    kk AS (SELECT CAST(COUNT(DISTINCT segment) AS BIGINT) AS k FROM cells),
-    full_days AS (
-      SELECT di FROM cells CROSS JOIN kk GROUP BY di, k HAVING COUNT(*) = k
-    ),
+    oracle=f"""
+    WITH {_SEGMENT_BLOCKS_CTE},
     r AS (
       SELECT c.di, c.segment,
              CAST(2 * RANK() OVER (PARTITION BY c.di ORDER BY c.rev_c)
@@ -5866,35 +5656,7 @@ def page_trend_test_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     alphabetical weight j comes from a k²-row self-join count, not an
     unpartitioned window. Scale: identical profile to
     `friedman_test_segments`."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cells = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.unix_date(F.col("o_orderdate").cast("date"))
-            .cast("bigint")
-            .alias("di"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        .agg(
-            F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
-        # the (day, segment) grid aggregate fans out into k, the
-        # complete-block filter and the downstream rank/indicator
-        # consumers — pin the ~|days|*k-row grid once instead of ~6
-        # join+groupBy re-executions (guide §5)
-        .localCheckpoint(eager=True)
-    )
-    kk = cells.agg(F.countDistinct("segment").cast("bigint").alias("k"))
-    full_days = (
-        cells.crossJoin(F.broadcast(kk))
-        .groupBy("di", "k")
-        .agg(F.count("*").alias("__cnt"))
-        .filter(F.col("__cnt") == F.col("k"))
-        .select("di")
-    )
+    cells, kk, full_days = _segment_blocks(spark, sf_dir)
     wd = Window.partitionBy("di").orderBy("rev_c")
     we = Window.partitionBy("di", "rev_c")
     r = cells.join(full_days, "di").select(
@@ -6096,14 +5858,8 @@ def jonckheere_terpstra_priority(
 
 @query(
     "sign_test_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     pairs AS (
       SELECT b.rev_c - a.rev_c AS dx
       FROM days a JOIN days b ON b.di = a.di + 1
@@ -6131,20 +5887,11 @@ def sign_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling of the Wilcoxon pair: under H0 (no drift) tomorrow is as
     likely up as down, so S = #(up) among the nonzero consecutive-day
     diffs is Binomial(n, 1/2) and z = (2S − n)/√n. Consecutive days
-    pair by an EQUI-join on di+1 (day-grain collapse first, so the
-    join is calendar-bounded and broadcastable — no ordered global
-    window, no LAG over an unpartitioned frame); counts are exact
+    pair by an EQUI-join on di+1 (calendar-bounded and
+    broadcastable — no ordered global window, no LAG over an
+    unpartitioned frame); counts are exact
     integers and z is one double tree rounded once to e6."""
-    o = _t(spark, sf_dir, "orders")
-    days = o.groupBy(
-        F.unix_date(F.col("o_orderdate").cast("date"))
-        .cast("bigint")
-        .alias("di")
-    ).agg(
-        F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    days = _daily_revenue(spark, sf_dir)
     nxt = days.select(
         (F.col("di") - 1).alias("di"), F.col("rev_c").alias("rev_next")
     )
@@ -6176,14 +5923,8 @@ def sign_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "grubbs_outlier_daily",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     mom AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(rev_c) AS HUGEINT) AS s,
@@ -6223,18 +5964,9 @@ def grubbs_outlier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     |n·x_i − Σx| (scaled by n, so no double mean enters the argmax;
     ties break to the earliest day) and only the final G is one double
     tree — max_dev/(n·s) with s from the exact integer moments — 
-    rounded once to e6. Scale: day-grain collapse, one broadcast of
-    the 3-number moment row, TakeOrderedAndProject(1) for the argmax."""
-    o = _t(spark, sf_dir, "orders")
-    days = o.groupBy(
-        F.unix_date(F.col("o_orderdate").cast("date"))
-        .cast("bigint")
-        .alias("di")
-    ).agg(
-        F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    rounded once to e6. Scale: one broadcast of the 3-number moment
+    row, TakeOrderedAndProject(1) for the argmax."""
+    days = _daily_revenue(spark, sf_dir)
     mom = days.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(F.col("rev_c").cast("decimal(38,0)")).alias("s"),
@@ -7645,14 +7377,8 @@ def mcnemar_paired_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "jarque_bera_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     tot AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(rev_c) AS BIGINT) AS s
@@ -7709,16 +7435,7 @@ def jarque_bera_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor) and floored to integers BEFORE the cross-day sums, making
     the central moments order-independent; the statistic is one double
     tree per output rounded once to e6."""
-    o = _t(spark, sf_dir, "orders")
-    days = o.groupBy(
-        F.unix_date(F.col("o_orderdate").cast("date"))
-        .cast("bigint")
-        .alias("di")
-    ).agg(
-        F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    days = _daily_revenue(spark, sf_dir)
     tot = days.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("rev_c").cast("bigint").alias("s"),
@@ -7867,14 +7584,8 @@ def kuiper_test_urgent_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dixon_q_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     ext AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(MIN(rev_c) AS BIGINT) AS x_lo,
@@ -7908,16 +7619,7 @@ def dixon_q_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two aggregate passes over the calendar-bounded day grain (extremes,
     then conditional inner extremes against the broadcast extremes);
     every input to the final ratios is an exact integer."""
-    o = _t(spark, sf_dir, "orders")
-    days = o.groupBy(
-        F.unix_date(F.col("o_orderdate").cast("date"))
-        .cast("bigint")
-        .alias("di")
-    ).agg(
-        F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    days = _daily_revenue(spark, sf_dir)
     ext = days.agg(
         F.count("*").cast("bigint").alias("n"),
         F.min("rev_c").cast("bigint").alias("x_lo"),
@@ -7952,14 +7654,8 @@ def dixon_q_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "anderson_darling_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     tot AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(rev_c) AS HUGEINT) AS s,
@@ -8032,16 +7728,7 @@ def anderson_darling_daily_revenue(
         with_global_rank,
     )
 
-    o = _t(spark, sf_dir, "orders")
-    days = o.groupBy(
-        F.unix_date(F.col("o_orderdate").cast("date"))
-        .cast("bigint")
-        .alias("di")
-    ).agg(
-        F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    days = _daily_revenue(spark, sf_dir)
     tot = days.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(F.col("rev_c").cast("decimal(38,0)")).alias("s"),
@@ -8220,14 +7907,8 @@ def cramer_von_mises_urgent_price(
 
 @query(
     "periodogram_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     tot AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(rev_c) AS BIGINT) AS s
@@ -8270,16 +7951,7 @@ def periodogram_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored to an e6 integer BEFORE the cross-day sums (the memory
     rule for order-independent double folds), and the power roll-up is
     one double tree per period."""
-    o = _t(spark, sf_dir, "orders")
-    days = o.groupBy(
-        F.unix_date(F.col("o_orderdate").cast("date"))
-        .cast("bigint")
-        .alias("di")
-    ).agg(
-        F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    days = _daily_revenue(spark, sf_dir)
     tot = days.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("rev_c").cast("bigint").alias("s"),
@@ -8333,14 +8005,8 @@ def periodogram_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pacf_daily_revenue",
-    oracle="""
-    WITH days AS (
-      SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT)
-               AS di,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               AS rev_c
-      FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH {_DAYS_CTE},
     tot AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(rev_c) AS BIGINT) AS s
@@ -8397,16 +8063,7 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     those integer sums rounded once to e6. Biased (n-denominator) ACF
     normalization: both lags share the same Σu² denominator, which
     cancels in φ22's ratio structure."""
-    o = _t(spark, sf_dir, "orders")
-    days = o.groupBy(
-        F.unix_date(F.col("o_orderdate").cast("date"))
-        .cast("bigint")
-        .alias("di")
-    ).agg(
-        F.sum(F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    days = _daily_revenue(spark, sf_dir)
     tot = days.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("rev_c").cast("bigint").alias("s"),

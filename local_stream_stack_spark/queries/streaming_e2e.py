@@ -38,6 +38,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from local_stream_stack_spark.queries.registry import query
+from local_stream_stack_spark.session import configure_for_oracle
+from local_stream_stack_spark.streaming.ops import (
+    latest_per_key_stream_parquet,
+    read_compacted_view,
+)
+from local_stream_stack_spark.utils.scratch import ephemeral_dir
+from local_stream_stack_spark.utils.ts import epoch_s, epoch_us
 
 
 def _stage_ordered(in_dir: str, *writers) -> None:
@@ -60,13 +67,7 @@ def _stage_ordered(in_dir: str, *writers) -> None:
         for path in sorted(current - seen):
             os.utime(path, (t, t))
         seen = current
-from local_stream_stack_spark.session import configure_for_oracle
-from local_stream_stack_spark.utils.ts import epoch_s, epoch_us
-from local_stream_stack_spark.streaming.ops import (
-    latest_per_key_stream_parquet,
-    read_compacted_view,
-)
-from local_stream_stack_spark.utils.scratch import ephemeral_dir
+
 
 _run_seq = itertools.count()
 
@@ -123,6 +124,15 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def _drain(q) -> None:
+    """Run a started streaming query until its bounded input is
+    consumed, then stop it (also when processing fails)."""
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def _run_to_table(out: DataFrame, name: str, output_mode: str) -> DataFrame:
     """Run a bounded streaming query to a memory sink; return the table.
 
@@ -140,10 +150,7 @@ def _run_to_table(out: DataFrame, name: str, output_mode: str) -> DataFrame:
         .option("checkpointLocation", cp)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return spark.table(qname)
 
 
@@ -248,10 +255,7 @@ def stream_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_path=target,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_compacted_view(spark, target)
         .select(
@@ -414,10 +418,7 @@ def stream_pipeline_yaml(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     pipe = Pipeline(spark, cfg)
     q = pipe.run()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return spark.table(qname).orderBy("doc_id")
 
 
@@ -631,10 +632,7 @@ def stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         store_path=store,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_ingest_store(spark, store)
         .select("doc_id", "fp", "lang")
@@ -739,10 +737,7 @@ def stream_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint_location=cp,
         portable=True,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_neardup_store(spark, store)
         .select("doc_id")
@@ -794,10 +789,7 @@ def stream_ingest_neardup_compacted(
             checkpoint_location=cp,
             portable=True,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -914,10 +906,7 @@ def stream_ingest_neardup_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         store_path=store,
         checkpoint_location=os.path.join(base, "cp"),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_neardup_tws_store(spark, store)
         .select("doc_id")
@@ -1024,10 +1013,7 @@ def stream_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         store_path=store,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return read_bm25_index_topk(spark, store, id_col="doc_id", k=20)
 
 
@@ -1128,10 +1114,7 @@ def stream_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
             store_path=store,
             checkpoint_location=cp,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -1219,10 +1202,7 @@ def stream_ingest_dedup_compacted(
             store_path=store,
             checkpoint_location=cp,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -1339,10 +1319,7 @@ def stream_join_enriched_incremental(
             store_path=store,
             checkpoint_location=cp,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -1496,10 +1473,7 @@ def stream_ivf_index_incremental(
             store_path=store,
             checkpoint_location=cp,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -1624,10 +1598,7 @@ def stream_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_path=view,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_scd2_dimension(spark, view)
         .select(
@@ -1699,10 +1670,7 @@ def stream_kmv_distinct_incremental(spark: SparkSession, sf_dir: str) -> DataFra
         checkpoint_location=cp,
         k=64,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return read_kmv_view(spark, view, k=64)
 
 
@@ -1762,10 +1730,7 @@ def stream_kmv_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=64,
             compact_every_n_epochs=2,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -1864,10 +1829,7 @@ def stream_unigram_lm_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         target_path=view,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     cnts = read_aggregate_view(spark, view).select(
         "tok", F.col("n_rows").cast("bigint").alias("cnt")
     )
@@ -1972,10 +1934,7 @@ def stream_corpus_card_incremental(spark: SparkSession, sf_dir: str) -> DataFram
         target_path=view,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     card = read_aggregate_view(spark, view).select(
         "lang",
         "source",
@@ -2079,10 +2038,7 @@ def stream_embedding_centroids_incremental(spark: SparkSession, sf_dir: str) -> 
         target_path=view,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_aggregate_view(spark, view)
         .select(
@@ -2171,10 +2127,7 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", cp)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         spark.read.parquet(target)
         .select(
@@ -2224,10 +2177,7 @@ def stream_aggregate_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_path=target,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_aggregate_view(spark, target)
         .select("user_id", "n_rows", F.col("sum_cents").cast("bigint"))
@@ -2294,10 +2244,7 @@ def stream_aggregate_view_compacted(
             checkpoint_location=cp,
             compact_every_n_epochs=2,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -2387,6 +2334,8 @@ def stream_restart_resume_view(
     root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
+    # the child is a fresh interpreter without this module's `_drain`,
+    # so its drain is spelled out
     phase_a = textwrap.dedent(
         f"""
         import sys
@@ -2445,10 +2394,7 @@ def stream_restart_resume_view(
         target_path=target,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_aggregate_view(spark, target)
         .select("user_id", "n_rows", F.col("sum_cents").cast("bigint"))
@@ -2497,10 +2443,7 @@ def pyds_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", os.path.join(base, "cp"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     df = spark.read.parquet(out)
     return (
         df.groupBy("bucket")
@@ -2808,10 +2751,7 @@ def stream_quality_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", cp)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
 
     def read_or_empty(path: str, schema: str) -> DataFrame:
         # a corpus can legitimately route 100% one way; the absent
@@ -3040,10 +2980,7 @@ def stream_curation_yaml(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     pipe = Pipeline(spark, cfg)
     q = pipe.run()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         spark.table(qname)
         .groupBy("predicted_lang")
@@ -3123,10 +3060,7 @@ def stream_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         store_path=os.path.join(base, "store"),
         checkpoint_location=os.path.join(base, "cp"),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         read_skyline_store(
             spark, os.path.join(base, "store"), "p_size", "price_c"
@@ -3308,10 +3242,7 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", os.path.join(base, "cp"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     return (
         spark.read.option("basePath", store)
         .parquet(f"{store}/__epoch=*")
@@ -3405,10 +3336,7 @@ def stream_cms_heavy_hitters_incremental(
         target_path=view,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     grid = read_aggregate_view(spark, view).select(
         "d", "w", F.col("n_rows").alias("cnt")
     )
@@ -3533,10 +3461,7 @@ def stream_pmi_collocations_incremental(
         target_path=view,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     folded = read_aggregate_view(spark, view)
     unic = folded.filter(F.col("kind") == "1").select(
         "a", F.col("n_rows").cast("bigint").alias("na")
@@ -3660,10 +3585,7 @@ def stream_histogram_quantiles_incremental(
         target_path=view,
         checkpoint_location=cp,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(q)
     bins = read_aggregate_view(spark, view).select(
         "bucket_log2", F.col("n_rows").cast("bigint").alias("n_events")
     )
@@ -3762,10 +3684,7 @@ def stream_minmax_view_incremental(
             checkpoint_location=cp,
             compact_every_n_epochs=2,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -3882,10 +3801,7 @@ def stream_bitmap_index_incremental(
             checkpoint_location=cp,
             compact_every_n_epochs=2,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,
@@ -3995,10 +3911,7 @@ def stream_mode_median_incremental(
             checkpoint_location=cp,
             compact_every_n_epochs=2,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(q)
 
     _stage_ordered(
         in_dir,

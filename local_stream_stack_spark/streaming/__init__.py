@@ -10,20 +10,16 @@ SURVEY.md §5).
 
 from local_stream_stack_spark.streaming.ops import (
     windowed_counts,
-    sliding_windowed_agg,
     session_windowed_counts,
     dedup_within_watermark,
-    latest_per_key_stream,
     latest_per_key_stream_parquet,
     stream_static_join,
 )
 
 __all__ = [
     "windowed_counts",
-    "sliding_windowed_agg",
     "session_windowed_counts",
     "dedup_within_watermark",
-    "latest_per_key_stream",
     "latest_per_key_stream_parquet",
     "stream_static_join",
 ]

@@ -54,29 +54,6 @@ def windowed_counts(
     )
 
 
-def sliding_windowed_agg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-    agg_value: str = "value",
-) -> DataFrame:
-    """Sliding window: each event lands in window/slide windows (row
-    expansion is a constant factor — scale-safe)."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"), F.sum(agg_value).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def session_windowed_counts(
     df: DataFrame,
     ts_col: str = "ts",
@@ -113,36 +90,6 @@ def dedup_within_watermark(
     )
 
 
-def latest_per_key_stream(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    target_path: str,
-    checkpoint_location: str,
-    tombstone_predicate: str | None = None,
-    n_buckets: int = 32,
-):
-    """Materialize a compacted (latest-per-key) view of a stream —
-    the reference's compacted-topic semantics (A15/A16) without Kafka.
-
-    DEFAULT = the bucket-partitioned parquet MERGE path
-    (``latest_per_key_stream_parquet``): per-epoch cost proportional
-    to touched buckets, no driver-side materialization of the view.
-    The driver-collect variant survives only as the explicitly named
-    test helper ``_latest_per_key_stream_tempview`` — its state lives
-    on the driver and grows with key cardinality, which is an OOM at
-    scale, never a default."""
-    return latest_per_key_stream_parquet(
-        df,
-        keys=keys,
-        order_col=order_col,
-        target_path=target_path,
-        checkpoint_location=checkpoint_location,
-        tombstone_predicate=tombstone_predicate,
-        n_buckets=n_buckets,
-    )
-
-
 def _latest_per_key_stream_tempview(
     df: DataFrame,
     keys: Sequence[str],
@@ -156,8 +103,8 @@ def _latest_per_key_stream_tempview(
     Collects the merged view to the driver every epoch: state grows
     with key cardinality, so this is ONLY for small unit-test streams
     where inspecting the view as a temp table is convenient. Use
-    ``latest_per_key_stream`` (parquet MERGE, bucket-pruned) for
-    anything real; it is the default for a reason.
+    ``latest_per_key_stream_parquet`` (parquet MERGE, bucket-pruned)
+    for anything real.
     """
     from local_stream_stack_spark.operators.events import latest_per_key
 
@@ -201,8 +148,8 @@ def latest_per_key_stream_parquet(
 ):
     """Materialize a compacted (latest-per-key) view of a stream into a
     bucket-partitioned parquet table — the scale form of
-    ``latest_per_key_stream`` (which keeps the view in a driver-side
-    temp view for unit tests).
+    ``_latest_per_key_stream_tempview`` (which keeps the view in a
+    driver-side temp view for unit tests).
 
     The view is partitioned by ``__bucket = pmod(xxhash64(keys), B)``.
     Each micro-batch reduces to latest-per-key, reads back ONLY the

@@ -7,9 +7,11 @@
   test reads them straight from the registry so the pytest-level
   parity gate survives the move.
 - the 16 real-codec ``multimodal_*`` queries, which share the
-  ``llm.decoded_stats_query`` skeleton: one exact check each, so a
-  change to the shared helper is caught by the default tier and not
-  only by a manual ``tools/check_parity.py`` run."""
+  ``llm.decoded_stats_query`` skeleton, and the 20 daily time-series
+  tests, which share ``relational_ext._daily_revenue`` and its oracle
+  CTE: one exact check each, so a change to a shared helper is caught
+  by the default tier and not only by a manual
+  ``tools/check_parity.py`` run."""
 
 from __future__ import annotations
 
@@ -58,6 +60,30 @@ CODEC_QUERIES = [
 ]
 
 
+DAILY_SERIES_QUERIES = [
+    "theil_sen_daily_revenue",
+    "pettitt_changepoint_daily",
+    "conformal_forecast_intervals",
+    "friedman_test_segments",
+    "hodges_lehmann_urgent_shift",
+    "kendall_tau_daily",
+    "seasonal_decomposition_weekday",
+    "runs_test_daily_revenue",
+    "mann_kendall_trend_daily",
+    "durbin_watson_daily_revenue",
+    "ljung_box_daily_revenue",
+    "cochran_q_daily",
+    "page_trend_test_segments",
+    "sign_test_daily_revenue",
+    "grubbs_outlier_daily",
+    "jarque_bera_daily_revenue",
+    "dixon_q_daily_revenue",
+    "anderson_darling_daily_revenue",
+    "periodogram_daily_revenue",
+    "pacf_daily_revenue",
+]
+
+
 def _assert_exact_vs_oracle(spark, name):
     spec = QUERIES[name]
     sdf = spec.fn(spark, SF)
@@ -86,4 +112,9 @@ def test_r7_batch_query_is_exact_vs_oracle(spark, name):
 
 @pytest.mark.parametrize("name", CODEC_QUERIES)
 def test_codec_query_is_exact_vs_oracle(spark, name):
+    _assert_exact_vs_oracle(spark, name)
+
+
+@pytest.mark.parametrize("name", DAILY_SERIES_QUERIES)
+def test_daily_series_query_is_exact_vs_oracle(spark, name):
     _assert_exact_vs_oracle(spark, name)
