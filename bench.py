@@ -626,7 +626,6 @@ GATE_V3: dict[str, float] = {
     "stream_quality_quarantine": 1.399,
     "stream_restart_resume_view": 16.675,
     "stream_running_totals": 1.998,
-    "stream_running_totals_tws": 3.725,
     "stream_scd2_dimension": 3.242,
     "stream_session_windows": 2.468,
     "stream_skyline_frontier": 0.949,
@@ -728,12 +727,13 @@ def _run_bench() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     # Bench-only heap (engine defaults untouched, same precedent as
-    # tools/scaling_curve.py): one JVM hosts 349 queries x best-of-N,
-    # including RocksDB transformWithState entries whose state-store
-    # providers stay registered per (checkpoint, partition) for the
-    # session's lifetime — at the default 1g the accumulated heap
-    # OOM'd a hash-aggregate spill read ~23 min into the round-10
-    # extended tier. Applies only when this process creates the
+    # tools/scaling_curve.py): one JVM hosts the whole catalog x
+    # best-of-N. At the default 1g the accumulated heap OOM'd a
+    # hash-aggregate spill read ~23 min into the round-10 extended
+    # tier, when RocksDB-backed entries still held state-store
+    # providers for the session's lifetime. No registered query sets
+    # the RocksDB provider any more, but no run has shown 1g to be
+    # enough, so 8g stays. Applies only when this process creates the
     # session (the normal bench path).
     spark = get_spark(
         app_name="bench",
@@ -790,9 +790,7 @@ def _run_bench() -> int:
     def run_set(names: list[str], runs: int = n_runs) -> dict[str, float]:
         timings: dict[str, float] = {}
         for name in names:
-            spec = QUERIES.get(name)
-            if spec is None:
-                continue
+            spec = QUERIES[name]
             if progress:
                 print(f"[bench] {name}", file=sys.stderr, flush=True)
             best = None

@@ -378,7 +378,6 @@ DRIVER_VERIFIED_PREVIOUSLY: frozenset[str] = frozenset(
         "stream_quality_quarantine",
         "stream_restart_resume_view",
         "stream_running_totals",
-        "stream_running_totals_tws",
         "stream_scd2_dimension",
         "stream_session_windows",
         "stream_skyline_frontier",

@@ -2778,98 +2778,6 @@ def stream_quality_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_running_totals_tws",
-    oracle="""
-    SELECT user_id,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-             AS sum_cents
-    FROM events
-    GROUP BY user_id
-    ORDER BY user_id
-    """,
-)
-def stream_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIVE transformWithStateInPandas under the oracle — Spark 4's
-    arbitrary-state successor API (named state variables, RocksDB
-    state store), running the same per-user (count, sum-of-cents)
-    semantics stream_running_totals pins on applyInPandasWithState.
-
-    The protobuf runtime the TWS Python runner needs is shipped to the
-    ALREADY-RUNNING session's workers via addPyFile
-    (utils/protobuf_compat.ship_protobuf_bundle) — the env-var route
-    only works before the JVM starts, which an externally-created
-    driver session has long passed. Where no runtime exists anywhere
-    on disk, the query falls back to the v1 API, whose semantics are
-    pinned identical (same state math, same output schema) — the
-    RESULT is engine-equal either way, which is what the oracle
-    checks. State is keyed by user_id (partitioned, O(1) per key);
-    RocksDB spills off-heap and changelog-checkpoints at scale."""
-    from local_stream_stack_spark.operators.events import latest_per_key
-    from local_stream_stack_spark.streaming.ops import (
-        running_totals_transform_with_state,
-        running_totals_with_state,
-        transform_with_state_supported,
-    )
-    from local_stream_stack_spark.utils.protobuf_compat import (
-        ship_protobuf_bundle,
-    )
-
-    s = _events_stream(spark, sf_dir).select(
-        "user_id",
-        "ts",
-        F.expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").alias("cents"),
-    )
-    use_tws = transform_with_state_supported() and ship_protobuf_bundle(
-        spark
-    )
-    if use_tws:
-        prev = None
-        try:
-            prev = spark.conf.get(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-        except Exception:
-            prev = None
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            out = running_totals_transform_with_state(
-                s.select("user_id", F.col("cents").alias("value")),
-                key="user_id",
-                value_col="value",
-            )
-            table = _run_to_table(out, "stream_totals_tws", "update")
-        finally:
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-            else:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-    else:  # no protobuf runtime anywhere: v1 API, identical semantics
-        out = running_totals_with_state(
-            s,
-            key="user_id",
-            value_col="cents",
-            ts_col="ts",
-            watermark="2 hours",
-        )
-        table = _run_to_table(out, "stream_totals_tws", "update")
-    final = latest_per_key(table, keys=["user_id"], order_by=["n_events"])
-    return final.select(
-        "user_id",
-        "n_events",
-        F.col("sum_value").cast("bigint").alias("sum_cents"),
-    ).orderBy("user_id")
-
-
 def _register_doc_schema():
     import pyspark.sql.types as T
 

@@ -4,8 +4,9 @@ log lines, `streaming_pipeline.py` logger calls).
 
 `MetricsListener` records one row per micro-batch progress event —
 (query name, batch id, input rows, processed rows/sec, batch duration,
-the ``addBatch`` phase, and the state operators' commit time and row
-count summed over ``stateOperators[]``, 0 for a stateless query) —
+the ``addBatch`` phase, the whole ``durationMs`` phase map as
+``phase_ms``, and the state operators' commit time and row count
+summed over ``stateOperators[]``, 0 for a stateless query) —
 into a bounded in-memory deque; `snapshot()` returns them as plain
 dicts, and `to_df()` as a DataFrame for SQL over the engine's own
 telemetry. At scale the same listener shape forwards to a metrics
@@ -47,6 +48,7 @@ class MetricsListener(StreamingQueryListener):
             "add_batch_ms": int(p.durationMs.get("addBatch", 0)),
             "state_commit_ms": sum(o.commitTimeMs for o in ops),
             "state_rows_total": sum(o.numRowsTotal for o in ops),
+            "phase_ms": {k: int(v) for k, v in p.durationMs.items()},
         }
         with self._lock:
             self._events.append(row)
@@ -74,6 +76,7 @@ class MetricsListener(StreamingQueryListener):
             "query_name string, query_id string, batch_id bigint, "
             "num_input_rows bigint, rows_per_sec double, "
             "batch_duration_ms bigint, add_batch_ms bigint, "
-            "state_commit_ms bigint, state_rows_total bigint"
+            "state_commit_ms bigint, state_rows_total bigint, "
+            "phase_ms map<string,bigint>"
         )
         return spark.createDataFrame(rows, schema=schema)

@@ -653,10 +653,10 @@ def running_totals_with_state(
     """Arbitrary stateful op via applyInPandasWithState: per-key
     running event count and value sum, emitted every micro-batch.
 
-    This is the custom-operator escape hatch the reference's
-    OffsetManager only gestures at (`offset_manager.py:46-103` is a
-    no-op placeholder): real keyed state, Arrow-batched, with
-    watermark-driven expiry. State per key is two floats — scale is
+    This is the engine's only keyed-state path, the custom-operator
+    escape hatch the reference's OffsetManager only gestures at
+    (`offset_manager.py:46-103` is a no-op placeholder): real keyed
+    state, Arrow-batched, with watermark-driven expiry. State per key is two floats — scale is
     bounded by distinct keys, not events.
     """
     from collections.abc import Iterator
@@ -687,70 +687,6 @@ def running_totals_with_state(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def transform_with_state_supported() -> bool:
-    """Spark 4's transformWithStateInPandas needs a protobuf-backed
-    Python runner (driver AND workers); absent google.protobuf it
-    crashes at query start, so callers gate on this and fall back to
-    ``running_totals_with_state`` (applyInPandasWithState). If no
-    protobuf wheel is installed, a bundled pure-Python runtime found
-    on disk is wired up instead (utils/protobuf_compat) — note worker
-    processes only see it when enable_protobuf() ran before the
-    SparkSession started."""
-    from local_stream_stack_spark.utils.protobuf_compat import (
-        enable_protobuf,
-    )
-
-    return enable_protobuf()
-
-
-def running_totals_transform_with_state(
-    df: DataFrame,
-    key: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key running totals on Spark 4's transformWithState API —
-    the successor to applyInPandasWithState: named state variables
-    (value/list/map state), timers, TTL, and RocksDB-backed state.
-
-    Same semantics as ``running_totals_with_state``; requires the
-    RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and a working
-    google.protobuf (see ``transform_with_state_supported``). At 100 TB
-    this is the preferred arbitrary-state path: RocksDB spills keyed
-    state off-heap and changelog-checkpoints incrementally, so state
-    scales with distinct keys per partition, not heap.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.totals = handle.getValueState("totals", "n bigint, s double")
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            n, s = self.totals.get() if self.totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf[value_col].sum())
-            self.totals.update((n, s))
-            yield pd.DataFrame(
-                {key: [key_tuple[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=f"{key} bigint, n_events bigint, sum_value double",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -8,14 +8,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from local_stream_stack_spark.session import get_spark
-from local_stream_stack_spark.utils.protobuf_compat import enable_protobuf
-
-# Must run BEFORE the first SparkSession: the JVM (and the Python
-# workers it forks) inherit PYTHONPATH / the protobuf version-check
-# flag from the driver process environment at JVM launch, which is
-# what lets transformWithStateInPandas' state-server runner import
-# google.protobuf inside workers when only a bundled runtime exists.
-enable_protobuf()
 
 SF_DIR = "/root/testdata/sf0.001"
 

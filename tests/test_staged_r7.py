@@ -1,5 +1,5 @@
 """Oracle parity in pytest — the exact Spark-vs-DuckDB compare of
-``tools/check_parity.compare``, for two groups:
+``tools/check_parity.compare``, for these groups:
 
 - the eight round-7 batch queries. These were implemented in round 6
   behind a staging map (the registered-query window was full), registered in
@@ -11,7 +11,11 @@
   tests, which share ``relational_ext._daily_revenue`` and its oracle
   CTE: one exact check each, so a change to a shared helper is caught
   by the default tier and not only by a manual
-  ``tools/check_parity.py`` run."""
+  ``tools/check_parity.py`` run.
+- two streams no other default-tier test runs end to end: the one
+  keyed-state query, ``stream_running_totals``, and
+  ``stream_restart_resume_view``, whose phase A runs in a subprocess
+  from a script built inside the query."""
 
 from __future__ import annotations
 
@@ -84,6 +88,12 @@ DAILY_SERIES_QUERIES = [
 ]
 
 
+STREAM_QUERIES = [
+    "stream_running_totals",
+    "stream_restart_resume_view",
+]
+
+
 def _assert_exact_vs_oracle(spark, name):
     spec = QUERIES[name]
     sdf = spec.fn(spark, SF)
@@ -117,4 +127,9 @@ def test_codec_query_is_exact_vs_oracle(spark, name):
 
 @pytest.mark.parametrize("name", DAILY_SERIES_QUERIES)
 def test_daily_series_query_is_exact_vs_oracle(spark, name):
+    _assert_exact_vs_oracle(spark, name)
+
+
+@pytest.mark.parametrize("name", STREAM_QUERIES)
+def test_stream_query_is_exact_vs_oracle(spark, name):
     _assert_exact_vs_oracle(spark, name)

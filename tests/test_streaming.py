@@ -419,69 +419,6 @@ def test_output_mode_complete_rewrites_full_result(spark, tmpdir):
     assert got == {(1, 2), (2, 1)}
 
 
-def test_transform_with_state_running_totals(spark, tmpdir):
-    """Spark 4 transformWithStateInPandas (named state vars + RocksDB
-    state store). The plan-construction path and output schema are
-    verified unconditionally; the protobuf-backed Python runner is
-    only needed at query START, so live execution runs where
-    google.protobuf exists and applyInPandasWithState
-    (test_running_totals_with_state) pins identical semantics on the
-    older API everywhere else. No skip either way."""
-    from local_stream_stack_spark.streaming.ops import (
-    _latest_per_key_stream_tempview,
-        running_totals_transform_with_state,
-        transform_with_state_supported,
-    )
-
-    rows = [
-        (1, _ts(10, 0), 1, "view", 10.0),
-        (2, _ts(10, 5), 1, "view", 5.0),
-        (3, _ts(11, 0), 2, "click", 7.0),
-    ]
-    path = _write_input(spark, tmpdir, rows)
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(path)
-    out = running_totals_transform_with_state(
-        stream.select("user_id", "value"), key="user_id", value_col="value"
-    )
-    # plan builds and carries the declared schema regardless of runner
-    assert out.isStreaming
-    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
-        ("user_id", "bigint"),
-        ("n_events", "bigint"),
-        ("sum_value", "double"),
-    ]
-    # the analyzed logical plan must contain the real TWS operator —
-    # proves the API wiring end-to-end short of starting the runner
-    logical = out._jdf.queryExecution().analyzed().toString()
-    assert "TransformWithStateInPySpark" in logical or (
-        "TransformWithState" in logical
-    ), logical[:1500]
-    if not transform_with_state_supported():
-        # The Python-side runner imports google.protobuf at query
-        # START (state-server wire protocol). enable_protobuf()
-        # (called in conftest before JVM launch) probes for a bundled
-        # public runtime when no wheel is installed; only if none
-        # exists anywhere on disk does this soft-gate trip, and the v1
-        # API (test_running_totals_with_state, applyInPandasWithState)
-        # still pins identical semantics with the assertion above
-        # pinning the v2 plan construction.
-        return
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        table = _run_stream(spark, out, "tws_totals", tmpdir, output_mode="update")
-        got = {(r.user_id, r.n_events, r.sum_value) for r in table.collect()}
-        assert got == {(1, 2, 15.0), (2, 1, 7.0)}
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 @pytest.mark.soak
 def test_metrics_listener_collects_batches(spark, tmpdir):
     """MetricsListener must see one progress row per micro-batch with
